@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every `SparkEntry.queries` entry at
   * `SPARK_GRAFT_SF_DIR` and prints TWO JSON lines: first the per-query
@@ -61,24 +60,17 @@ object Bench {
     }
   }
 
+  /** Trimmed stdout of `git <args>`, or None when git exits non-zero. */
+  private def git(args: String*): Option[String] = {
+    val p = new ProcessBuilder(("git" +: args): _*)
+      .redirectError(ProcessBuilder.Redirect.DISCARD).start()
+    val out = new String(p.getInputStream.readAllBytes(), "UTF-8").trim
+    if (p.waitFor() == 0) Some(out) else None
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (200L * 1024 * 1024).toString)
-      // static JVM-level codegen class cache (r12): 100 entries thrash
-      // across ~300 query shapes — min-of-2's second pass recompiled
-      // every generated class (see GraftSession.builder note)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.subexpressionElimination.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: JIT/codegen/parquet-footer caches otherwise charge
     // ~7 s to whichever query happens to run first
@@ -144,15 +136,10 @@ object Bench {
             s"— no seeded_epoch in $baseFile (add it at the next re-seed)")
         case Some(m) =>
           val srcRoot = java.nio.file.Paths.get("src/main/scala/graft")
-          def gitEpoch(f: java.nio.file.Path): Long = {
-            val p = new ProcessBuilder(
-              "git", "log", "-1", "--format=%ct", "--", f.toString)
-              .redirectErrorStream(true).start()
-            val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
-            p.waitFor()
-            out.trim.linesIterator.nextOption()
+          def gitEpoch(f: java.nio.file.Path): Long =
+            git("log", "-1", "--format=%ct", "--", f.toString)
+              .flatMap(_.linesIterator.nextOption())
               .flatMap(_.trim.toLongOption).getOrElse(0L)
-          }
           staleBaseWarnings(m.group(1).toLong,
             names.filter(base.contains), srcRoot, gitEpoch)
             .foreach(System.err.println)
@@ -233,10 +220,7 @@ object Bench {
         }
         probeOnce() // JIT warmup, discarded
         val probe = Seq.fill(3)(probeOnce()).min
-        val headProc = new ProcessBuilder("git", "rev-parse", "--short", "HEAD")
-          .redirectErrorStream(true).start()
-        val head = new String(headProc.getInputStream.readAllBytes(), "UTF-8").trim
-        headProc.waitFor()
+        val head = git("rev-parse", "--short", "HEAD").getOrElse("unknown")
         val date = java.time.format.DateTimeFormatter.ISO_INSTANT
           .format(java.time.Instant.now()).take(16)
         val cells = ledgerQs.map { q =>
@@ -248,14 +232,10 @@ object Bench {
         // anchor the ledger at the REPO ROOT, not the cwd (r11 ADVICE:
         // a Bench launched elsewhere silently stranded the row in a
         // stray file, breaking the cross-round absolute audit trail)
-        val rootProc = new ProcessBuilder("git", "rev-parse", "--show-toplevel")
-          .redirectErrorStream(true).start()
-        val rootOut = new String(rootProc.getInputStream.readAllBytes(), "UTF-8").trim
-        val root =
-          if (rootProc.waitFor() == 0 && rootOut.nonEmpty &&
-              java.nio.file.Files.isDirectory(java.nio.file.Paths.get(rootOut)))
-            java.nio.file.Paths.get(rootOut)
-          else java.nio.file.Paths.get(".")
+        val root = git("rev-parse", "--show-toplevel")
+          .map(java.nio.file.Paths.get(_))
+          .filter(java.nio.file.Files.isDirectory(_))
+          .getOrElse(java.nio.file.Paths.get("."))
         java.nio.file.Files.write(root.resolve("PERF_LEDGER.md"),
           row.getBytes("UTF-8"),
           java.nio.file.StandardOpenOption.CREATE,

@@ -293,8 +293,7 @@ object Monitor {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outFile = args.lift(1).getOrElse("/tmp/graft_monitor.tsv")
-    val spark = graft.core.GraftSession.local(
-      math.min(32, Runtime.getRuntime.availableProcessors()))
+    val spark = graft.core.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val lines = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val t0 = System.nanoTime()

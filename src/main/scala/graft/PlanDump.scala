@@ -1,14 +1,30 @@
 package graft
 
-/** Dev tool: dump a physical plan for EVERY `SparkEntry.queries` entry
-  * into PLANS.md — `explain("formatted")` for the plan-shape-critical
-  * picks below (scan pruning, broadcast placement, partial aggregation,
-  * exchange reuse and codegen spans reviewable as text), the compact
-  * simple physical tree for the rest. Totality is enforced (round-7
-  * verdict #4): the tool fails loudly if a pick key no longer exists,
-  * and every queries key gets a section, so a new query can't silently
-  * ship without a reviewable plan.
-  * Run: `sbt "runMain graft.PlanDump [sfDir]"`. */
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{ExplainMode, FormattedMode, SimpleMode}
+import scala.jdk.CollectionConverters._
+
+/** Dev tool with two modes.
+  *
+  * `sbt "runMain graft.PlanDump [sfDir]"` dumps a physical plan for EVERY
+  * `SparkEntry.queries` entry into PLANS.md — `explain("formatted")` for
+  * the plan-shape-critical picks below (scan pruning, broadcast
+  * placement, partial aggregation, exchange reuse and codegen spans
+  * reviewable as text), the compact simple physical tree for the rest.
+  * Totality is enforced (round-7 verdict #4): the tool fails loudly if a
+  * pick key no longer exists, and every queries key gets a section, so a
+  * new query can't silently ship without a reviewable plan.
+  *
+  * `sbt "runMain graft.PlanDump <dir> <tag> <query...>"` is the
+  * optimisation-round probe: under the bench session, at
+  * `SPARK_GRAFT_SF_DIR` (default sf0.1) as Bench reads it, it writes
+  * `<dir>/<query>_<tag>.txt` per named query — the formatted plan the
+  * bench runs, then every Spark job's wall time and description for a
+  * cold and a warm run (the per-job decomposition the UI would give,
+  * with the UI disabled). */
 object PlanDump {
 
   private val picks: Seq[(String, String)] = Seq(
@@ -90,8 +106,23 @@ object PlanDump {
     "q295_audio_decode" -> "real WAV decode: encode+decode in ONE narrow typed mapPartitions at scan parallelism — payload bytes never shuffle, header-only parse, output sorted by doc_id",
     "q297_video_demux" -> "real animated-GIF demux: encode+frame-count in ONE narrow typed mapPartitions (ImageIO sequence reader) — the same zero-shuffle codec shape as q269/q295")
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
+  def main(args: Array[String]): Unit = args.toSeq match {
+    case dir +: tag +: names if names.nonEmpty => probe(dir, tag, names)
+    case Seq() | Seq(_) => plansMd(args.headOption.getOrElse("/root/testdata/sf0.001"))
+    case _ => sys.error("usage: PlanDump [sfDir] | PlanDump <dir> <tag> <query...>")
+  }
+
+  /** The plan in `mode`, long lines cut: q128's bloom sketch prints as a
+    * ~200 KB hex literal. */
+  private def planText(df: DataFrame, mode: ExplainMode): String =
+    df.queryExecution.explainString(mode)
+      .split("\n", -1)
+      .map(l =>
+        if (l.length > 500) l.take(300) + s"… [truncated ${l.length - 300} chars]"
+        else l)
+      .mkString("\n")
+
+  private def plansMd(sfDir: String): Unit = {
     val spark = graft.core.GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val noteOf = picks.toMap
@@ -107,15 +138,7 @@ object PlanDump {
     var dumped = 0
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
-      val mode =
-        if (noteOf.contains(name)) org.apache.spark.sql.execution.FormattedMode
-        else org.apache.spark.sql.execution.SimpleMode
-      val plan = df.queryExecution.explainString(mode)
-        .split("\n", -1)
-        .map(l => // q128's bloom sketch prints as a ~200 KB hex literal
-          if (l.length > 500) l.take(300) + s"… [truncated ${l.length - 300} chars]"
-          else l)
-        .mkString("\n")
+      val plan = planText(df, if (noteOf.contains(name)) FormattedMode else SimpleMode)
       val head = noteOf.get(name).map(n => s"$name — $n").getOrElse(name)
       out ++= s"\n## $head\n\n```\n$plan```\n"
       dumped += 1
@@ -123,9 +146,60 @@ object PlanDump {
     require(dumped == SparkEntry.queries.size,
       s"PlanDump dumped $dumped of ${SparkEntry.queries.size} queries")
     out ++= cboAppendix(spark, sfDir)
-    java.nio.file.Files.write(java.nio.file.Paths.get("PLANS.md"),
-      out.toString.getBytes("UTF-8"))
+    Files.write(Paths.get("PLANS.md"), out.toString.getBytes("UTF-8"))
     println(s"[plandump] wrote PLANS.md ($dumped plans, ${picks.size} annotated)")
+    spark.stop()
+  }
+
+  private def probe(dir: String, tag: String, names: Seq[String]): Unit = {
+    val missing = names.filterNot(SparkEntry.queries.contains)
+    require(missing.isEmpty, s"unknown queries: $missing")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = graft.core.GraftSession.local()
+    spark.sparkContext.setLogLevel("ERROR")
+    val starts = new ConcurrentHashMap[Int, (Long, String)]()
+    val jobs = new ConcurrentLinkedQueue[(Int, Double, String)]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val desc = Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")
+        starts.put(js.jobId, (System.nanoTime(), desc))
+      }
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        Option(starts.remove(je.jobId)).foreach { case (t0, desc) =>
+          jobs.add((je.jobId, (System.nanoTime() - t0) / 1e9, desc))
+        }
+    })
+    // Bench's untimed warm-up
+    spark.range(1000000L).selectExpr("sum(id)").collect()
+    Files.createDirectories(Paths.get(dir))
+    names.foreach { name =>
+      // build and count the query once -> (its frame, its per-job listing)
+      def run(pass: String): (DataFrame, String) = {
+        jobs.clear()
+        val t0 = System.nanoTime()
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        df.count()
+        val total = (System.nanoTime() - t0) / 1e9
+        Thread.sleep(200) // let the listener bus drain
+        val rs = jobs.asScala.toSeq.sortBy(_._1)
+        val lines = rs.map { case (id, sec, desc) =>
+          f"  job $id%4d  $sec%7.3f s  $desc".stripTrailing }
+        (df, (f"== $pass: $name total $total%.2f s ==" +: lines :+
+          f"  [sum of jobs ${rs.map(_._2).sum}%.2f s over ${rs.size} jobs]")
+          .mkString("", "\n", "\n"))
+      }
+      val (df, cold) = run("cold")
+      // planned after the cold run so the listing above times no explain
+      val plan = planText(df, FormattedMode)
+      val (_, warm) = run("warm")
+      val file = Paths.get(dir, s"${name}_$tag.txt")
+      Files.write(file, (s"# $name — $tag (sf=$sfDir, " +
+        s"${spark.sparkContext.master})\n\n$plan\n\n$cold\n$warm")
+        .getBytes("UTF-8"))
+      println(s"[plandump] wrote $file")
+    }
     spark.stop()
   }
 
@@ -134,8 +208,7 @@ object PlanDump {
     * [[graft.plans.CboProbe]] recipe): ANALYZE'd fixture tables, the
     * Q5 join family written fact-first, optimized join order with and
     * without `spark.sql.cbo.{enabled,joinReorder.enabled}`. */
-  private def cboAppendix(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): String = {
+  private def cboAppendix(spark: SparkSession, sfDir: String): String = {
     import graft.plans.CboProbe
     def nameOf(t: String) = s"stats_$t"
     CboProbe.prepare(spark, sfDir, nameOf)
@@ -164,8 +237,9 @@ object PlanDump {
          |The stats-informed order starts from the filtered dims instead
          |of the fact table; results are identical (spec-pinned). The
          |driver fixtures stay bare parquet (no catalog stats), so the
-         |default GraftSession leaves CBO off — `GraftSession.cboBuilder`
-         |is the variant an ANALYZE'd warehouse deployment turns on.
+         |default GraftSession leaves CBO off — an ANALYZE'd warehouse
+         |deployment turns on `spark.sql.cbo.enabled` and
+         |`spark.sql.cbo.joinReorder.enabled`.
          |""".stripMargin
     } finally {
       spark.conf.set("spark.sql.cbo.enabled", "false")

@@ -17,8 +17,7 @@ object ScaleProbe {
       case filt :: _ => (10, Some(filt.split(",").toSet))
       case Nil => (10, None)
     }
-    val spark = graft.core.GraftSession.local(
-      math.min(32, Runtime.getRuntime.availableProcessors()))
+    val spark = graft.core.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,18 +11,8 @@ object Verify {
       case Some(f) => n => f.split(',').exists(n.startsWith)
       case None    => _ => true
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // static codegen class cache, see GraftSession.builder (r12)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.subexpressionElimination.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the bench's session: the oracle grades the plan the bench times
+    val spark = graft.core.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>

@@ -12,23 +12,15 @@ import org.apache.spark.sql.SparkSession
   * runtime — the knob that matters at 100 TB.
   */
 object GraftSession {
-  def local(threads: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
+  /** The engine session every main and the test suite build. `threads`
+    * sets both the local master and the shuffle partition count; it
+    * defaults to `SPARK_GRAFT_CPUS`, else `min(32, nproc)`. */
+  def local(threads: Int = defaultThreads): SparkSession =
     builder(s"local[$threads]", threads).getOrCreate()
 
-  /** CBO-enabled builder (round 12, VERDICT r11 #2): catalog-statistics
-    * cost estimation plus the DP join-reorder rule. Only effective over
-    * tables that carry `ANALYZE TABLE ... COMPUTE STATISTICS [FOR
-    * COLUMNS ...]` stats — every join side needs a rowCount estimate or
-    * CostBasedJoinReorder skips the tree (CboReorderSpec pins the
-    * end-to-end seam: stats → estimation → a reordered TPC-H join).
-    * Kept a VARIANT, not the default: the driver fixtures are bare
-    * parquet reads with no catalog stats, where CBO adds planning cost
-    * for nothing — a production deployment that ANALYZEs its warehouse
-    * tables turns it on here. */
-  def cboBuilder(master: String, shufflePartitions: Int): SparkSession.Builder =
-    builder(master, shufflePartitions)
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.joinReorder.enabled", "true")
+  private def defaultThreads: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .map(_.toInt)
+    .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors()))
 
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()

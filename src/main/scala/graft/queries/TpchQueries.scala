@@ -421,9 +421,8 @@ object TpchQueries extends QueryPack {
     * reordered plan's RESULTS against an independent engine): the Q5
     * revenue rollup written in a deliberately bad fact-first textual
     * order over ANALYZE'd managed copies of the fixture tables, planned
-    * with `spark.sql.cbo.{enabled,joinReorder.enabled}` on (the
-    * [[graft.core.GraftSession.cboBuilder]] confs, set/restored around
-    * the one plan). The DuckDB oracle is the standard Q5 text (t05)
+    * with `spark.sql.cbo.enabled` and `spark.sql.cbo.joinReorder.enabled`
+    * on (set/restored around the one plan). The DuckDB oracle is the standard Q5 text (t05)
     * over the raw parquet — a reorder that changed results would
     * hash-fail here, in CORRECTNESS, not only in a spec.
     *

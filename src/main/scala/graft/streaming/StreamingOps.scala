@@ -53,7 +53,15 @@ object StreamingOps {
   /** Online-status state machine (R4): start → online + playCount++;
     * heartbeat → refresh (revives a missed start); finish → offline.
     * Transition rules mirror `UserStatusByRunLog.scala:224-291`; the
-    * full-outer-join against the previous snapshot becomes GroupState. */
+    * full-outer-join against the previous snapshot becomes GroupState.
+    *
+    * With the default `idleTimeout` the query runs
+    * `ProcessingTimeTimeout`, under which Spark plans another
+    * micro-batch on every trigger to check for expired groups: the
+    * query never goes idle, so `StreamingQuery.processAllAvailable()`
+    * never returns, and the default trigger commits an empty batch
+    * between data batches. Callers should start the query with a
+    * `Trigger.ProcessingTime` interval. */
   def onlineStatus(events: Dataset[PlayEvent],
       idleTimeout: Option[String] = Some("2 hours"))(
       implicit s: SparkSession): Dataset[StatusChange] = {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * loop CboStatsSpec opened): ANALYZE'd catalog statistics over the
   * TPC-H fixture tables must actually CHANGE the join order of a
   * multi-join text when `spark.sql.cbo.{enabled,joinReorder.enabled}`
-  * are on ([[graft.core.GraftSession.cboBuilder]]'s confs). The probe
+  * are on. The probe
   * recipe — fixture build with orphan-location cleanup, ANALYZE column
   * map, the deliberately fact-first Q5 text, the join-leaf extractor —
   * is the ONE shared [[CboProbe]], also behind PlanDump's PLANS.md
