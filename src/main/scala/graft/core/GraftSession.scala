@@ -45,4 +45,10 @@ object GraftSession {
       // in Tables.events (Spark has no nanos timestamp type)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // file: paths on the fork-free local filesystem (LocalFs.scala): the
+      // stock one starts a chmod/readlink process per file it creates or
+      // renames, a floor under every state-store and log commit
+      .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[ForkFreeLocalFs].getName)
 }

@@ -18,8 +18,9 @@ object LogParsers {
     * pairs on `pairSep`, split each pair on the FIRST `kvSep` only (URIs
     * contain ':'), trim both sides, drop pairs with empty keys. */
   def strToMap(s: String, pairSep: String, kvSep: String): Map[String, String] =
-    if (s == null || s.isEmpty) Map.empty
-    else s.split(java.util.regex.Pattern.quote(pairSep), -1).iterator
+    // an empty pairSep splits into single characters, none of which is a pair
+    if (s == null || s.isEmpty || pairSep.isEmpty) Map.empty
+    else splitFields(s, pairSep)
       .flatMap { pair =>
         val i = pair.indexOf(kvSep)
         if (i <= 0) None
@@ -29,6 +30,21 @@ object LogParsers {
           if (k.isEmpty) None else Some(k -> v)
         }
       }.toMap
+
+  /** `s.split(Pattern.quote(sep), -1)` without compiling a regex per call:
+    * every field in order, leading and trailing empty ones included.
+    * `sep` must be non-empty. */
+  private[etl] def splitFields(s: String, sep: String): Iterator[String] = {
+    val fields = scala.collection.mutable.ArrayBuffer.empty[String]
+    var from = 0
+    var i = s.indexOf(sep)
+    while (i >= 0) {
+      fields += s.substring(from, i)
+      from = i + sep.length
+      i = s.indexOf(sep, from)
+    }
+    (fields += s.substring(from)).iterator
+  }
 
   /** Log families dropped by the ETL (`etl/RunLogParser.scala:548-560`). */
   val runLogBlacklist: Seq[String] = Seq(
@@ -83,7 +99,7 @@ object LogParsers {
     val extStart = line.indexOf("<|>", close)
     val ext =
       if (extStart < 0) Map.empty[String, String]
-      else line.substring(extStart + 3).split("<&>", -1).iterator
+      else splitFields(line.substring(extStart + 3), "<&>")
         .map(_.trim.stripPrefix("<").stripSuffix(">"))
         .filter(p => p.startsWith("(") && p.endsWith(")"))
         .map(p => p.substring(1, p.length - 1))

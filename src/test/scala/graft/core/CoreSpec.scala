@@ -17,6 +17,10 @@ class CoreSpec extends SparkSpec {
     assert(c.get("spark.sql.autoBroadcastJoinThreshold").toLong ==
       200L * 1024 * 1024)
     assert(c.get("spark.sql.codegen.cache.maxEntries") == "5000")
+    assert(c.get("spark.hadoop.fs.file.impl") ==
+      classOf[ForkFreeLocalFileSystem].getName)
+    assert(c.get("spark.hadoop.fs.AbstractFileSystem.file.impl") ==
+      classOf[ForkFreeLocalFs].getName)
   }
 
   test("every harness table loads with a non-empty schema") {

@@ -58,6 +58,65 @@ class ParserPropertySpec extends AnyFunSuite {
     }
   }
 
+  // The regex splits the indexOf splits replaced, kept as the reference:
+  // `split(Pattern.quote(sep), -1)` in strToMap and `split("<&>", -1)`
+  // in parseArateLine's ext section.
+  private def regexFields(s: String, sep: String): Seq[String] =
+    s.split(java.util.regex.Pattern.quote(sep), -1).toSeq
+
+  private def regexStrToMap(s: String, pairSep: String,
+      kvSep: String): Map[String, String] =
+    if (s == null || s.isEmpty) Map.empty
+    else regexFields(s, pairSep).iterator.flatMap { pair =>
+      val i = pair.indexOf(kvSep)
+      if (i <= 0) None
+      else {
+        val k = pair.substring(0, i).trim
+        val v = pair.substring(i + kvSep.length).trim
+        if (k.isEmpty) None else Some(k -> v)
+      }
+    }.toMap
+
+  private def regexArateExt(ext: String): Map[String, String] =
+    regexFields(ext, "<&>").iterator
+      .map(_.trim.stripPrefix("<").stripSuffix(">"))
+      .filter(p => p.startsWith("(") && p.endsWith(")"))
+      .map(p => p.substring(1, p.length - 1))
+      .flatMap { kv =>
+        val i = kv.indexOf(',')
+        if (i <= 0) None else Some(kv.substring(0, i).trim -> kv.substring(i + 1).trim)
+      }.toMap
+
+  // strings dense in separator characters: empty pairs, leading and
+  // trailing separators, runs of them and separators inside values
+  private val sepHeavy = Gen.listOf(Gen.oneOf(
+    Gen.oneOf("a", "b", " ", ",", ":", "<", "&", ">", "(", ")", "."),
+    Gen.oneOf("<&>", "<(k,v)>", ",,", "::", "a:b")))
+    .map(_.mkString)
+  private val separator = Gen.oneOf(",", ":", "<&>", "&", "aa", ", ", ".")
+
+  test("splitFields matches String.split(Pattern.quote(sep), -1)") {
+    check(Gen.zip(sepHeavy, separator)) { case (s, sep) =>
+      LogParsers.splitFields(s, sep).toSeq == regexFields(s, sep)
+    }
+    assert(LogParsers.splitFields("", ",").toSeq == Seq(""))
+    assert(LogParsers.splitFields(",a,,b,", ",").toSeq == Seq("", "a", "", "b", ""))
+  }
+
+  test("strToMap matches its regex-split form, empty pairSep included") {
+    check(Gen.zip(sepHeavy, Gen.oneOf(separator, Gen.const("")), separator)) {
+      case (s, pairSep, kvSep) =>
+        LogParsers.strToMap(s, pairSep, kvSep) == regexStrToMap(s, pairSep, kvSep)
+    }
+  }
+
+  test("parseArateLine ext matches its regex-split form") {
+    check(sepHeavy) { ext =>
+      val line = s"<?><[0101,1537951414577,7,3,1005358791]><|>$ext"
+      LogParsers.parseArateLine(line).map(_.ext) == Some(regexArateExt(ext))
+    }
+  }
+
   test("parsers never throw on arbitrary garbage") {
     check(Gen.asciiPrintableStr) { s =>
       LogParsers.parseRunLogLine(s)
