@@ -1,5 +1,7 @@
 package graft
 
+import graft.core.Cut
+
 /** Completeness monitor (SURVEY §0 family 4: `monitor/MonitorApp.scala:16-48`
   * re-queries every report table for the day and writes a completeness
   * report). Here: run every registered query against a scale dir and
@@ -239,7 +241,7 @@ object Monitor {
         col("run_us")).as("l"))
       .select(col("artifact"), col("l.n_keys_hit").as("hit"),
         col("l.drain_ms").as("ms"))
-      .localCheckpoint() // consumed twice (per-store rows + summary)
+      .transform(Cut(_)) // consumed twice (per-store rows + summary)
     val per = latest.select(
       concat(lit("erasure:"), col("artifact")).as("family"),
       col("hit").as("n"),

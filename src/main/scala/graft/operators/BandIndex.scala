@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sources.ArtifactCommit
+import graft.core.Cut
 
 /** Persisted MinHash-LSH BAND INDEX — the dedup family's artifact tier
   * (round 10; the [[VectorIndex]]/[[SuffixIndex]] lifecycle applied to
@@ -196,8 +197,8 @@ object BandIndex {
     val fpP = new org.apache.hadoop.fs.Path(s"$dir/fp/batch_id=$batchId")
     // checkpoint BEFORE deleting: a redelivered frame may derive from
     // the very subtree the deletes drop (the StreamingExport rule)
-    val bb = bandsOf(batch, idCol, textCol, m).localCheckpoint()
-    val ff = fpsOf(batch, idCol, textCol).localCheckpoint()
+    val bb = Cut(bandsOf(batch, idCol, textCol, m))
+    val ff = Cut(fpsOf(batch, idCol, textCol))
     fs.delete(bandsP, true); fs.delete(fpP, true)
     bb.repartition(col("band_idx"))
       .write.partitionBy("band_idx").parquet(bandsP.toString)
@@ -225,7 +226,7 @@ object BandIndex {
       .where(col("doc_id").isNotNull).distinct()
     val del = ArtifactCommit.readIdsWal(spark, pendingIds, "doc_id")
       .map(delNew.unionByName(_).distinct()).getOrElse(delNew)
-      .localCheckpoint()
+      .transform(Cut(_))
     val bands = spark.read.schema(bandSchema).parquet(s"$dir/bands")
     val fps = spark.read.schema(fpSchema).parquet(s"$dir/fp")
     val hitB = bands.join(del, Seq("doc_id"), "left_semi")
@@ -265,7 +266,7 @@ object BandIndex {
       val surv = bands.join(tdf, Seq("batch_id", "band_idx"), "left_semi")
         .join(del, Seq("doc_id"), "left_anti")
         .select($"doc_id", $"band_hash", $"batch_id", $"band_idx")
-        .localCheckpoint()
+        .transform(Cut(_))
       surv.repartition($"batch_id", $"band_idx")
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
@@ -285,7 +286,7 @@ object BandIndex {
       val surv = fps.join(tdf, Seq("batch_id"), "left_semi")
         .join(del, Seq("doc_id"), "left_anti")
         .select($"doc_id", $"fp", $"batch_id")
-        .localCheckpoint()
+        .transform(Cut(_))
       surv.repartition($"batch_id")
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")

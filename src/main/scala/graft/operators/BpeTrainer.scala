@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.core.Cut
 
 /** Distributed BPE (byte-pair-encoding) vocabulary induction — the
   * tokenizer-training step of a training-data pipeline, which the q42
@@ -14,8 +15,8 @@ import org.apache.spark.sql.functions._
   * replication). Each merge round is one flatMap over the histogram
   * (adjacent symbol pairs), one grouped sum, and one TakeOrdered
   * top-1 driver action (the k-means loop shape — never a global
-  * window); the merged histogram is localCheckpoint'ed per round so
-  * lineage stays flat. Ties break deterministically on
+  * window); the merged histogram is cut through [[graft.core.Cut]] per
+  * round so lineage stays flat. Ties break deterministically on
   * (count desc, left asc, right asc), so the learned merge sequence is
   * reproducible across runs and cluster layouts.
   *
@@ -43,7 +44,7 @@ object BpeTrainer {
       .groupBy($"w").agg(count(lit(1)).as("n"))
       .as[(String, Long)]
       .map { case (w, n) => WordSyms(w.map(_.toString), n) }
-      .localCheckpoint()
+      .transform(Cut(_))
 
     val merges = scala.collection.mutable.ArrayBuffer[(String, String)]()
     var done = false
@@ -63,7 +64,7 @@ object BpeTrainer {
           merges += ((a, b))
           hist = hist
             .map(ws => WordSyms(applyMerge(ws.syms, a, b), ws.n))
-            .localCheckpoint()
+            .transform(Cut(_))
       }
     }
     merges.toSeq
@@ -112,7 +113,7 @@ object BpeTrainer {
       .groupBy($"w").agg(count(lit(1)).as("n"))
       .as[(String, Long)]
       .map { case (w, n) => WordSyms(w.map(_.toString), n) }
-      .localCheckpoint()
+      .transform(Cut(_))
     // all symbol strings alive in the histogram: initial alphabet (tiny —
     // distinct characters) plus every concat we create. Driver-side, exact.
     val symbolSet = scala.collection.mutable.Set[String](
@@ -175,7 +176,7 @@ object BpeTrainer {
         hist = hist
           .map(ws => WordSyms(
             ms.foldLeft(ws.syms) { case (s, (a, b)) => applyMerge(s, a, b) }, ws.n))
-          .localCheckpoint()
+          .transform(Cut(_))
       }
     }
     merges.toSeq
@@ -333,9 +334,10 @@ object BpeTrainer {
     *
     * r13: the encode is the native `graft_bpe_*` expression pair
     * ([[graft.expressions.BpeTable]] — in-place int-array form of
-    * [[encodeWord]], BpeExprSpec pins token-for-token equality to
-    * [[tokenizeTyped]]), not a typed `Dataset.map`: the plan stays one
-    * whole-stage-codegen Project with no encoder ser/de, and because
+    * [[encodeWord]], BpeExprSpec pins token-for-token equality to the
+    * pre-r13 typed-map tokenize it keeps), not a typed `Dataset.map`:
+    * the plan stays one whole-stage-codegen Project with no encoder
+    * ser/de, and because
     * `bpe_tokens` and `n_bpe_tokens` are INDEPENDENT expressions,
     * column pruning drops the token-string materialization wherever
     * only the count is consumed — every declared query path. */
@@ -347,26 +349,6 @@ object BpeTrainer {
     docs.select(col(idCol).cast("long").as(idCol),
       call_function("graft_bpe_tokens", t, m).as("bpe_tokens"),
       call_function("graft_bpe_ntokens", t, m).as("n_bpe_tokens"))
-  }
-
-  /** The pre-r13 typed-map tokenize — the reference implementation
-    * BpeExprSpec pins [[tokenize]] against (same fold-pinned
-    * [[encodeWord]] per word, same null-as-empty framing). */
-  private[graft] def tokenizeTyped(docs: DataFrame, idCol: String,
-      textCol: String, merges: Seq[(String, String)]): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(ranksOf(merges))
-    docs.select(col(idCol).cast("long"), col(textCol))
-      .as[(Long, String)]
-      .map { case (id, text) =>
-        val toks = Option(text).getOrElse("").trim.split("\\s+").iterator
-          .filter(_.nonEmpty)
-          .flatMap(w => encodeWord(w, bc.value))
-          .toSeq
-        (id, toks, toks.size.toLong)
-      }
-      .toDF(idCol, "bpe_tokens", "n_bpe_tokens")
   }
 
   /** Per-rank application counts of the FULL fold over one word:
@@ -423,39 +405,6 @@ object BpeTrainer {
         col("kv.n_bpe_tokens").as("n_bpe_tokens"))
   }
 
-  /** The pre-r13 typed-map curve — BpeExprSpec's reference for
-    * [[countTokensCurve]]. */
-  private[graft] def countTokensCurveTyped(docs: DataFrame, idCol: String,
-      textCol: String, merges: Seq[(String, String)],
-      sizes: Seq[Int]): DataFrame = {
-    require(sizes.nonEmpty && sizes.forall(k => k >= 0 && k <= merges.size),
-      s"curve sizes must lie in [0, ${merges.size}] (got $sizes)")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val nRanks = merges.size
-    val bcR = spark.sparkContext.broadcast(ranksOf(merges))
-    val bcS = spark.sparkContext.broadcast(sizes.toIndexedSeq)
-    docs.select(col(idCol).cast("long"), col(textCol))
-      .as[(Long, String)]
-      .flatMap { case (id, text) =>
-        val perRank = new Array[Long](nRanks + 1)
-        var chars = 0L
-        Option(text).getOrElse("").trim.split("\\s+").iterator
-          .filter(_.nonEmpty)
-          .foreach { w =>
-            chars += w.length
-            val c = heapApplyCounts(w, bcR.value, nRanks)
-            var i = 0
-            while (i < c.length) { perRank(i + 1) += c(i); i += 1 }
-          }
-        // prefix sums in place: perRank(k) = applications below rank k
-        var i = 1
-        while (i < perRank.length) { perRank(i) += perRank(i - 1); i += 1 }
-        bcS.value.map(k => (id, k.toLong, chars - perRank(k)))
-      }
-      .toDF(idCol, "n_merges", "n_bpe_tokens")
-  }
-
   /** Per-doc BPE token count: (idCol, n_bpe_tokens). r13: the native
     * count expression — no token strings, no typed-map boundary, one
     * codegen'd Project (see [[tokenize]]). */
@@ -465,22 +414,5 @@ object BpeTrainer {
     docs.select(col(idCol).cast("long").as(idCol),
       call_function("graft_bpe_ntokens", col(textCol), mergesLit(merges))
         .as("n_bpe_tokens"))
-  }
-
-  /** The pre-r13 typed-map count — BpeExprSpec's reference for
-    * [[countTokens]]. */
-  private[graft] def countTokensTyped(docs: DataFrame, idCol: String,
-      textCol: String, merges: Seq[(String, String)]): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(ranksOf(merges))
-    docs.select(col(idCol).cast("long"), col(textCol))
-      .as[(Long, String)]
-      .map { case (id, text) =>
-        val toks = text.trim.split("\\s+").iterator.filter(_.nonEmpty)
-          .map(w => encodeWord(w, bc.value).size.toLong).sum
-        (id, toks)
-      }
-      .toDF(idCol, "n_bpe_tokens")
   }
 }

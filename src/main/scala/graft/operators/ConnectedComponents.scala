@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Cut
 
 /** Connected components over an edge list — the dedup-CLUSTERING step of
   * a training-data pipeline: near-dup pair lists (q47-q50) become
@@ -15,10 +16,9 @@ import org.apache.spark.sql.functions._
   * itself and its neighbors; fixpoint = each node holds the minimum id
   * of its component. Rounds needed = graph diameter. Each round is ONE
   * shuffle (join edges with labels + min-agg) over O(|E|) rows, and each
-  * round's result is `localCheckpoint`ed: iterative DataFrame loops
-  * otherwise stack lineage until planning itself dominates. At cluster
-  * scale use reliable `checkpoint()` (survives executor loss), and for
-  * adversarial diameters (long chains) switch to
+  * round's result is cut through [[graft.core.Cut]]: iterative
+  * DataFrame loops otherwise stack lineage until planning itself
+  * dominates. For adversarial diameters (long chains) switch to
   * [[alternatingStar]], whose round count is O(log n) regardless of diameter —
   * near-dup graphs in practice are dense cliques with tiny diameters, so
   * plain propagation converges in a handful of rounds.
@@ -38,10 +38,10 @@ object ConnectedComponents {
         .select(col(dstCol).cast("long").as("a"), col(srcCol).cast("long").as("b")))
       .where(col("a").isNotNull && col("b").isNotNull)
       .distinct()
-      .localCheckpoint() // reused every round — scan the pair join once
+      .transform(Cut(_)) // reused every round — scan the pair join once
     var labels = sym.select(col("a").as("id")).distinct()
       .withColumn("comp", col("id"))
-      .localCheckpoint()
+      .transform(Cut(_))
     var iter = 0
     var converged = sym.isEmpty
     while (!converged && iter < maxIter) {
@@ -51,7 +51,7 @@ object ConnectedComponents {
         .select(labels("id").as("id"),
           least(labels("comp"), coalesce(col("nmin"), labels("comp"))).as("comp"),
           labels("comp").as("prev"))
-        .localCheckpoint()
+        .transform(Cut(_))
       converged = next.where(col("comp") < col("prev")).isEmpty
       labels = next.drop("prev")
       iter += 1
@@ -87,10 +87,10 @@ object ConnectedComponents {
       .distinct()
     val multi = m.groupBy(col("bkt")).agg(count(lit(1)).as("__n"))
       .where(col("__n") >= 2).select(col("bkt"))
-    val mm = m.join(multi, Seq("bkt"), "left_semi").localCheckpoint()
+    val mm = Cut(m.join(multi, Seq("bkt"), "left_semi"))
     var labels = mm.select(col("id")).distinct()
       .withColumn("comp", col("id"))
-      .localCheckpoint()
+      .transform(Cut(_))
     var iter = 0
     var converged = mm.isEmpty
     while (!converged && iter < maxIter) {
@@ -102,7 +102,7 @@ object ConnectedComponents {
         .select(col("id"),
           least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"),
           col("comp").as("prev"))
-        .localCheckpoint()
+        .transform(Cut(_))
       converged = next.where(col("comp") < col("prev")).isEmpty
       labels = next.drop("prev")
       iter += 1
@@ -137,7 +137,7 @@ object ConnectedComponents {
         greatest(col(srcCol).cast("long"), col(dstCol).cast("long")).as("v"))
       .where(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
       .distinct()
-      .localCheckpoint()
+      .transform(Cut(_))
 
     // one star half-round: re-attach the selected neighbors to
     // m(u) = min(Γ(u) ∪ {u}); keepLarger selects v > u (large) or v < u
@@ -159,7 +159,7 @@ object ConnectedComponents {
         .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
         .where(col("u") =!= col("v"))
         .distinct()
-        .localCheckpoint()
+        .transform(Cut(_))
     }
 
     var iter = 0

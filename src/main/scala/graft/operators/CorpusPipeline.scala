@@ -73,7 +73,7 @@ object CorpusPipeline {
 
   /** `cut` is applied at the expensive stage boundaries (exact-dedup
     * window, LSH near-dedup, decontam, quota) — pass
-    * `_.localCheckpoint()` (or a persist) when several actions will
+    * `Cut(_)` ([[graft.core.Cut]]) when several actions will
     * consume the staged frames: a drop-reasons audit's six anti-joins
     * otherwise re-derive every nested stage pipeline per reference
     * (the r12 q224 finding; this is the object scaladoc's

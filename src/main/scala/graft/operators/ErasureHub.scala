@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.ArtifactCommit
+import graft.core.Cut
 
 /** GDPR erasure ORCHESTRATOR (round 11, VERDICT r10 #3): ONE deletion
   * feed fanned to EVERY persisted artifact's own forget — vector index,
@@ -80,7 +81,7 @@ object ErasureHub {
     // checkpoint BEFORE the WAL rewrite deletes the files it may read
     val ids = ArtifactCommit.readIdsWal(spark, wal, "id")
       .map(delNew.unionByName(_).distinct()).getOrElse(delNew)
-      .localCheckpoint()
+      .transform(Cut(_))
     ArtifactCommit.writeIdsWal(ids, wal) // commitment BEFORE the fan-out
     // (distinct keys, keys hit by the feed) in ONE job — ids is
     // already distinct, so the left join cannot fan out

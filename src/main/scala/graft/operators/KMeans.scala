@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.DedupFunctions.hash32
 import graft.functions.VectorFunctions.dot
+import graft.core.Cut
 
 /** Distributed Lloyd's k-means over an embedding column — the TRAINING
   * step behind IVF list assignment (q53 probes per-label centroids; in
@@ -20,8 +21,8 @@ import graft.functions.VectorFunctions.dot
   * full table (assignment = codegen'd dot products + a per-row min,
   * no shuffle), then ONE (cluster, dim)-keyed hash agg for the new
   * means (shuffle rows = n·dim, uniformly keyed). State between
-  * iterations is k centroid rows localCheckpoint'ed — at cluster scale
-  * swap for reliable checkpoint(). Assignment cost dominates at
+  * iterations is k centroid rows cut through [[graft.core.Cut]].
+  * Assignment cost dominates at
   * k·n·dim multiply-adds per iter, the textbook Lloyd bound. */
 object KMeans {
 
@@ -36,7 +37,7 @@ object KMeans {
     graft.expressions.GraftFunctions.ensureRegistered(embs.sparkSession)
     val e = embs.select(col(idCol).as("__id"), col(vecCol).cast("array<float>").as("__v"))
       .where(col("__v").isNotNull)
-      .localCheckpoint()
+      .transform(Cut(_))
 
     // deterministic farthest-first seeding (the greedy 2-approximation
     // behind k-means++): seed 1 = smallest salted-hash rank, each next
@@ -44,7 +45,7 @@ object KMeans {
     // Hash-rank seeding alone can land two seeds in one true cluster
     // and permanently lose another — farthest-first cannot, as long as
     // clusters are separated. k-1 tiny driver rounds of one scan each.
-    val first = seedFirst(e).localCheckpoint()
+    val first = Cut(seedFirst(e))
     var cent = first
     for (i <- 1 until k) {
       val mind = e.crossJoin(broadcast(
@@ -56,7 +57,7 @@ object KMeans {
         .orderBy(col("__d").desc, col("__id"))
         .limit(1)
         .select(lit(i.toLong).as("__cid"), col("__v").as("__c"))
-      cent = cent.unionByName(mind).localCheckpoint()
+      cent = Cut(cent.unionByName(mind))
     }
 
     var assign: DataFrame = null
@@ -71,7 +72,7 @@ object KMeans {
         .withColumn("__r", row_number().over(w))
         .where(col("__r") === 1)
         .select(col("__id"), col("__cid"), col("__v"))
-        .localCheckpoint()
+        .transform(Cut(_))
       // new means per (cluster, dimension); empty clusters keep their
       // previous centroid (left join + coalesce)
       val means = assign
@@ -84,7 +85,7 @@ object KMeans {
           transform(col("pm"), x => x.getField("m").cast("float")).as("__cNew"))
       cent = cent.join(means, Seq("__cid"), "left")
         .select(col("__cid"), coalesce(col("__cNew"), col("__c")).as("__c"))
-        .localCheckpoint()
+        .transform(Cut(_))
     }
     assign.select(col("__id").as(idCol), col("__cid").cast("long").as("cluster"))
   }
@@ -146,7 +147,7 @@ object KMeans {
     val e = embs.select(col(gCol).as("__g"), col(idCol).as("__id"),
         col(vecCol).cast("array<float>").as("__v"))
       .where(col("__v").isNotNull)
-      .localCheckpoint()
+      .transform(Cut(_))
 
     var cent: DataFrame = seedMode match {
       case "hash" =>
@@ -186,7 +187,7 @@ object KMeans {
           .withColumn("__idl", col("__id").cast("long"))
         e2.join(ids, e2("__gs") === ids("__gs") && e2("__idl") === ids("__sid"))
           .select(e2("__g"), col("__cid"), col("__v").as("__c"))
-          .localCheckpoint()
+          .transform(Cut(_))
       case _ =>
         // seed 1 per group: smallest (salted-hash, id) — the argmin form
         // of seedFirst's TakeOrdered, aggregated per group
@@ -196,7 +197,7 @@ object KMeans {
             hash32(concat(lit("km:"), col("__id").cast("string"))),
             col("__id"))).as("__c"))
           .select(col("__g"), lit(0L).as("__cid"), col("__c"))
-          .localCheckpoint()
+          .transform(Cut(_))
         // farthest-first: per group, the point maximizing the min
         // distance to that group's chosen seeds (ties on id)
         for (i <- 1 until k) {
@@ -209,7 +210,7 @@ object KMeans {
             .groupBy(col("__g"))
             .agg(min_by(col("__v"), struct(-col("__d"), col("__id"))).as("__c"))
             .select(col("__g"), lit(i.toLong).as("__cid"), col("__c"))
-          c0 = c0.unionByName(next).localCheckpoint()
+          c0 = Cut(c0.unionByName(next))
         }
         c0
     }
@@ -225,12 +226,12 @@ object KMeans {
         .withColumn("__r", row_number().over(w))
         .where(col("__r") === 1)
         .select(col("__g"), col("__id"), col("__cid"), col("__v"))
-        .localCheckpoint()
+        .transform(Cut(_))
       val means = groupedMeans(assign)
       cent = cent.join(means, Seq("__g", "__cid"), "left")
         .select(col("__g"), col("__cid"),
           coalesce(col("__cNew"), col("__c")).as("__c"))
-        .localCheckpoint()
+        .transform(Cut(_))
     }
     // final mean pass over the last assignment — lloydCentroids semantics
     groupedMeans(assign)

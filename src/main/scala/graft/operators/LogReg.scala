@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Cut
 
 /** In-engine TRAINER for the hashed linear classifier — the missing
   * training half of the model-based family: [[HashedLinearModel]]
@@ -37,8 +38,8 @@ import org.apache.spark.sql.functions._
   *   3. one shuffle join of the O(docs) residuals back onto the
   *      feature frame (corpus-tracking — NO hint, AQE decides),
   *   4. one bucket-keyed hash agg (the gradient, O(dims) rows),
-  * and the new weight frame is localCheckpoint'ed (O(dims) rows; swap
-  * reliable checkpoint at cluster scale). Overflow headroom: gradients
+  * and the new weight frame is cut through [[graft.core.Cut]] (O(dims)
+  * rows). Overflow headroom: gradients
   * sum r·c with |r| ≤ 2^20, so ~10^13 corpus positions stay inside a
   * long with two decades to spare; per-doc logits are bounded by
   * docLen · 2^[[WMaxLog2]] · 2^10 ≈ 2^48 at 10k-token docs.
@@ -121,7 +122,7 @@ object LogReg {
         wtCol.cast("long").as("__wt")), Seq(idCol))
       .select(col(idCol).as("__id"), col("b").cast("long").as("b"),
         col("c").cast("long").as("c"), col("__ym"), col("__wt"))
-      .localCheckpoint()
+      .transform(Cut(_))
     // gradient normalizer = total residual mass: the intercept rows are
     // exactly one per doc, so this sums each doc's weight once
     val wTot = lf.where(col("b") === -1L)
@@ -165,7 +166,7 @@ object LogReg {
           least(greatest(coalesce(col("w"), lit(0L)) +
             coalesce(col("__d"), lit(0L)), lit(-wmax)), lit(wmax)).as("w"))
         .where(col("w") =!= 0L) // keep the frame sparse
-        .localCheckpoint()
+        .transform(Cut(_))
     }
     w
   }

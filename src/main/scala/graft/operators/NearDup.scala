@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.DedupFunctions._
+import graft.core.Cut
 
 /** Parameterized near-duplicate detection over a document table — the
   * production surface behind q47/q49/q77 (`queries/DedupQueries`), which
@@ -160,7 +161,7 @@ object NearDup {
     val sh = shingleRows(docs, idCol, textCol, k)
       .dropDuplicates(idCol, "s")
       .withColumn("n", count(lit(1)).over(byDoc))
-      .localCheckpoint()
+      .transform(Cut(_))
     val df = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
     // prefix size ⌊(1−t)n⌋+1:  rk ≤ ⌊n(tDen−tNum)/tDen⌋+1
     //   ⟺  (rk−1)·tDen ≤ n·(tDen−tNum)   (integer rk, n)

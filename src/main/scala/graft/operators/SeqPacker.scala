@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Cut
 
 /** Doc-boundary-aware sequence packing — the ACTING counterpart of
   * q239's packing-purity census (the repo's census→action pattern:
@@ -229,7 +230,7 @@ object SeqPacker {
     val spark = packed.sparkSession
     // checkpoint once: the pack chain (rank + exchange + fold) would
     // otherwise recompute for the data write AND the manifest agg
-    val df = packed.toDF().localCheckpoint()
+    val df = Cut(packed.toDF())
     graft.sources.ArtifactCommit.publish(spark, outDir) { tmp =>
       df.repartition(col("lang"), col("bucket"))
         .write.partitionBy("lang", "bucket")
@@ -295,7 +296,7 @@ object SeqPacker {
     // checkpoint BEFORE the sidecar rewrite deletes the files it reads
     val del = ArtifactCommit.readIdsWal(spark, pendingIds, "docId")
       .map(delNew.unionByName(_).distinct()).getOrElse(delNew)
-      .localCheckpoint()
+      .transform(Cut(_))
     val (files, man) = readShards(spark, dir)
     val hitAgg = files.join(del, Seq("docId"), "left_semi")
       .groupBy(col("lang"), col("bucket"))
@@ -327,7 +328,7 @@ object SeqPacker {
       .join(del, Seq("docId"), "left_anti")
       .select(col("lang"), col("bucket"), col("ord1"), col("ord2"),
         col("docId"), col("size")).as[Piece], cap)
-      .toDF().localCheckpoint()
+      .toDF().transform(Cut(_))
     val survivors = repacked.select(col("lang"), col("bucket")).distinct()
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     repacked.write.mode(org.apache.spark.sql.SaveMode.Overwrite)

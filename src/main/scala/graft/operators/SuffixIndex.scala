@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sources.ArtifactCommit
+import graft.core.Cut
 
 /** Persisted EXACT-substring index — the artifact tier of the suffix
   * array (VERDICT r9 #1). [[SuffixRank.bestPerPosition]] is the most
@@ -165,7 +166,7 @@ object SuffixIndex {
     // checkpoint the descent ONCE: best and order both derive from it,
     // and the ladder behind it must never replay twice
     val pairs = SuffixRank.adjacentLcpRn(SuffixRank.levels(toks))
-      .localCheckpoint()
+      .transform(Cut(_))
     val best = pairs.select($"a_doc".as("doc_id"), $"a_pos".as("pos"), $"lcp")
       .unionAll(pairs.select($"b_doc".as("doc_id"), $"b_pos".as("pos"), $"lcp"))
       .groupBy($"doc_id", $"pos").agg(max($"lcp").as("best"))
@@ -194,11 +195,11 @@ object SuffixIndex {
     // and the shared descent behind them must never replay
     val b = best.select(col("doc_id").cast("long").as("doc_id"),
       col("pos").cast("long").as("pos"), col("best").cast("long").as("best"))
-      .localCheckpoint()
+      .transform(Cut(_))
     val o = order.select(col("rn").cast("long").as("rn"),
       col("doc_id").cast("long").as("doc_id"),
       col("pos").cast("long").as("pos"), col("l").cast("long").as("l"))
-      .localCheckpoint()
+      .transform(Cut(_))
     val st = b.agg(min($"doc_id"), max($"doc_id"), count(lit(1))).head()
     val nPos = st.getLong(2)
     val grain =
@@ -327,7 +328,7 @@ object SuffixIndex {
       .select(col("doc_id").cast("long").as("doc_id"),
         col("text").cast("string").as("text"))
       .where(col("doc_id").isNotNull && col("text").isNotNull)
-      .localCheckpoint()
+      .transform(Cut(_))
     fs.delete(p, true)
     // a daily batch tracks INGEST volume, not the corpus — keep the
     // write parallel but few-filed (one leaf dir per batch either way)
@@ -422,7 +423,7 @@ object SuffixIndex {
     }
     // checkpoint: the sidecar rewrite and the publish both delete files
     // this frame may read
-    val pendCk = pend.localCheckpoint()
+    val pendCk = Cut(pend)
     val base = baseDocs.select(col("doc_id").cast("long").as("doc_id"),
       col("text").cast("string").as("text"))
     val merged = base.join(pendCk, Seq("doc_id"), "left_anti")
@@ -474,7 +475,7 @@ object SuffixIndex {
     // checkpoint BEFORE the sidecar rewrite deletes the files it reads
     val del = ArtifactCommit.readIdsWal(spark, pendingIds, "doc_id")
       .map(delNew.unionByName(_).distinct()).getOrElse(delNew)
-      .localCheckpoint()
+      .transform(Cut(_))
     val data = spark.read.schema(dataSchema).parquet(s"$dir/data")
     val hitAgg = data.join(del, Seq("doc_id"), "left_semi")
       .groupBy($"doc_range")
@@ -549,7 +550,7 @@ object SuffixIndex {
     // sidecar scrub, atomic via the frame WAL; zero survivors drop it
     if (sidecarDocs > 0L) {
       val surv = sidecarDf.get.join(del, Seq("doc_id"), "left_anti")
-        .localCheckpoint()
+        .transform(Cut(_))
       if (surv.isEmpty) ArtifactCommit.clearIdsWal(fs, sidecarP)
       else ArtifactCommit.writeFrameWal(surv, sidecarP)
     }
@@ -567,7 +568,7 @@ object SuffixIndex {
         .join(touchedDf, Seq("doc_range"), "left_semi")
         .join(del, Seq("doc_id"), "left_anti")
         .select($"doc_range" +: cols.map(col): _*)
-        .localCheckpoint()
+        .transform(Cut(_))
       survivors.repartition($"doc_range")
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
@@ -615,7 +616,7 @@ object SuffixIndex {
         val survI = ingest.join(tdf, Seq("batch_id"), "left_semi")
           .join(del, Seq("doc_id"), "left_anti")
           .select($"batch_id", $"doc_id", $"text")
-          .localCheckpoint()
+          .transform(Cut(_))
         survI.repartition($"batch_id")
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .option("partitionOverwriteMode", "dynamic")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.DistributedRank
+import graft.core.Cut
 
 /** Distributed suffix-array construction by PREFIX DOUBLING — the exact
   * substring-duplication primitive (Manber & Myers SODA'90; the
@@ -25,9 +26,10 @@ import graft.functions.DistributedRank
   * once. Rounds stop early when the class count plateaus (if a
   * doubling step splits nothing it never will — identical-to-the-end
   * suffixes keep tied ranks forever, so plateau, not all-distinct, is
-  * the sound stop). Each level is lineage-cut through [[cut]]: iterative
-  * lineage would otherwise grow 2^rounds (the WalkRank/KMeans iteration
-  * rule), and plan-stat BigInts would compound per round (see [[cut]]).
+  * the sound stop). Each level is lineage-cut through
+  * [[graft.core.Cut.freshStats]]: iterative lineage would otherwise grow
+  * 2^rounds (the WalkRank/KMeans iteration rule), and plan-stat BigInts
+  * would compound per round (see its scaladoc).
   *
   * At 100 TB: positions = tokens, so each round sorts/shuffles the
   * token count — linear per round, log(maxDocLen) rounds, no step ever
@@ -37,32 +39,6 @@ import graft.functions.DistributedRank
   * dedup through the hashed family.
   */
 object SuffixRank {
-
-  /** Lineage cut that also RESETS plan statistics. `Dataset
-    * .localCheckpoint` rewrites the checkpointed leaf's stats from the
-    * pre-checkpoint plan — and Catalyst's size-only visitor estimates a
-    * join as the PRODUCT of its children's sizeInBytes, so an iterative
-    * self-join ladder compounds the stored BigInt multiplicatively:
-    * digits roughly ×4 per doubling round, and by round 7 the driver
-    * spends MINUTES inside BigInteger.multiply just to plan the next
-    * level (observed: 20+ min of driver CPU on a 2k-position fixture).
-    * Round-tripping through an RDD localCheckpoint and createDataFrame
-    * yields a fresh leaf with default stats — constant-size arithmetic
-    * every level; AQE still re-plans downstream joins from RUNTIME
-    * sizes, so no broadcast opportunity is lost. Materialization is
-    * lazy (first action fills the checkpoint cache once); a 100 TB run
-    * that must survive executor loss should swap in reliable
-    * `RDD.checkpoint` — same stats-reset property. An UnsafeRow-level
-    * variant (queryExecution.toRdd + internalCreateDataFrame, skipping
-    * both external-Row conversions) measured NEUTRAL here in a
-    * same-hour A/B: these frames are three longs, so converter cost is
-    * negligible — that lever only pays on wide rows (the q225 lesson
-    * in reverse). */
-  private def cut(df: DataFrame): DataFrame = {
-    val rdd = df.rdd
-    rdd.localCheckpoint()
-    df.sparkSession.createDataFrame(rdd, df.schema)
-  }
 
   /** Rank-level ladder. `toks` carries one row per (doc_id, pos, tok),
     * pos 0-based and dense within each doc. Returns (k, frame) pairs,
@@ -89,7 +65,7 @@ object SuffixRank {
     val t = toks
       .select(col("doc_id").cast("long"), col("pos").cast("long"),
         col("tok").cast("string"))
-      .transform(cut)
+      .transform(Cut.freshStats)
     val maxLen = t.groupBy($"doc_id").agg(count(lit(1)).as("__n"))
       .agg(coalesce(max($"__n"), lit(0L))).head().getLong(0)
     // fused alphabet pass: end-of-doc pad "" sorts below every real
@@ -102,7 +78,7 @@ object SuffixRank {
       .select($"doc_id", $"pos", $"tok",
         when($"__nt0".isNull, lit(""))
           .otherwise(concat(lit("\u0001"), $"__nt0")).as("__nt"))
-      .transform(cut)
+      .transform(Cut.freshStats)
     val alpha1 = big.select($"tok").distinct().as[String].rdd
       .sortBy(identity).zipWithIndex()
       .toDF("tok", "__r1")
@@ -113,10 +89,10 @@ object SuffixRank {
       .toDF("tok", "__nt", "__r2")
     val cur1 = big.join(alpha1, Seq("tok"))
       .select($"doc_id", $"pos", ($"__r1" + 1L).as("r"))
-      .transform(cut)
+      .transform(Cut.freshStats)
     var cur = big.join(alpha2, Seq("tok", "__nt"))
       .select($"doc_id", $"pos", ($"__r2" + 1L).as("r"))
-      .transform(cut)
+      .transform(Cut.freshStats)
     var k = 2L
     var out = Vector(1L -> cur1, k -> cur)
     // ranks are dense 1..n, so max(r) IS the class count — one narrow
@@ -135,7 +111,7 @@ object SuffixRank {
       val pairs = paired.select($"r", $"r2").distinct()
       val ranked = DistributedRank.withRowNumber(pairs, "__nr",
         col("r"), col("r2"))
-        .transform(cut)
+        .transform(Cut.freshStats)
       // the distinct (r, r2) pair count IS the next level's class count
       // — checking it on the (small, checkpointed) pair-rank table
       // BEFORE the positions-scale join-back skips materializing a
@@ -146,7 +122,7 @@ object SuffixRank {
       else {
         cur = paired.join(ranked, Seq("r", "r2"))
           .select($"doc_id", $"pos", $"__nr".as("r"))
-          .transform(cut)
+          .transform(Cut.freshStats)
         k *= 2
         out :+= (k -> cur)
         nr = n2
@@ -213,7 +189,7 @@ object SuffixRank {
       $"doc_id".as("b_doc"), $"pos".as("b_pos"))
     var adj = a.join(b, Seq("__rn"))
       .withColumn("lcp", lit(0L))
-      .transform(cut)
+      .transform(Cut.freshStats)
     // unlike the levels ladder (self-join per round — exponential
     // lineage AND stat growth), this descent adds two joins against
     // already-checkpointed level frames per step: lineage and plan-stat

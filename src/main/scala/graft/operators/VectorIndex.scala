@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Cut
 
 /** Persisted IVF-PQ vector index — the artifact LIFECYCLE around the
   * ANN family (FAISS `IVFx,PQy` as tables, not a serving process):
@@ -126,7 +127,7 @@ object VectorIndex {
       cells: Int, m: Int, ks: Int, iters: Int = 3): Index = {
     val e = embs.select(col(idCol), col(vecCol))
       .where(col(idCol).isNotNull && col(vecCol).isNotNull)
-      .localCheckpoint()
+      .transform(Cut(_))
     val cents = KMeans.lloydCentroids(e, idCol, vecCol, k = cells, iters = iters)
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
@@ -179,7 +180,7 @@ object VectorIndex {
       dim: Int, cells: Int, m: Int, ks: Int, iters: Int = 3): Index = {
     val e = embs.select(col(idCol), col(vecCol))
       .where(col(idCol).isNotNull && col(vecCol).isNotNull)
-      .localCheckpoint()
+      .transform(Cut(_))
     val rot = Opq.fit(e, vecCol, dim, m)
     val rotated = Opq.transform(e, idCol, vecCol, rot)
     build(rotated, idCol, vecCol, dim, cells, m, ks, iters)
@@ -322,8 +323,8 @@ object VectorIndex {
     * Mechanics: (1) one semi join finds the touched (batch_id, cluster)
     * partitions — a bounded driver list (batches × cells, partition
     * METADATA, not data); (2) the touched partitions' surviving rows are
-    * anti-joined against the deletion list, materialized (localCheckpoint
-    * — the frame must not lazily re-read the files it is about to
+    * anti-joined against the deletion list, materialized (through
+    * [[graft.core.Cut]] — the frame must not lazily re-read the files it is about to
     * replace), and written back via DYNAMIC partition overwrite, so
     * untouched partitions keep their bytes; (3) partitions the deletion
     * EMPTIED (dynamic overwrite never sees them — zero output rows)
@@ -359,7 +360,7 @@ object VectorIndex {
     }.reduce(_ || _)
     val remaining = codes.where(touchedPred)
       .join(del, Seq(idCol), "left_anti")
-      .localCheckpoint()
+      .transform(Cut(_))
     val survivors = remaining.select(col("batch_id"), col("cluster"))
       .distinct().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     remaining

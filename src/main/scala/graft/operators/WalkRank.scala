@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Cut
 
 /** Bipartite random-walk rank (PageRank-style with damping): the
   * centrality primitive corpus curation uses for source/domain quality
@@ -15,10 +16,10 @@ import org.apache.spark.sql.functions._
   * then back), so cost is O(E) per iteration with a fixed iteration
   * count (the `walk_rank_e` ScaleProbe row measures per-iteration cost
   * linear in E). The ONE loop input — the edge list with BOTH endpoint
-  * degrees pre-attached — is localCheckpoint'ed before iterating (the
-  * KMeans/BpeTrainer pattern): without it every round's lazy plan
-  * re-scans and re-shuffles the source from scratch and plan size grows
-  * per round. Degrees attach via two KEY-PARTITIONED window counts, not
+  * degrees pre-attached — is cut through [[graft.core.Cut]] before
+  * iterating (the KMeans/BpeTrainer pattern): without it every round's
+  * lazy plan re-scans and re-shuffles the source from scratch and plan
+  * size grows per round. Degrees attach via two KEY-PARTITIONED window counts, not
   * degree-frame joins: each window is one exchange + per-key count over
   * the edge list itself — no aggregate subtree to build, no join, and no
   * broadcast-size assumption on the endpoint population (a web-scale
@@ -49,7 +50,7 @@ object WalkRank {
     val edgesF = e0
       .withColumn("dn", count(lit(1)).over(Window.partitionBy(col("o"))))
       .withColumn("dp", count(lit(1)).over(Window.partitionBy(col("p"))))
-      .localCheckpoint()
+      .transform(Cut(_))
     val np = edgesF.select(col("p")).distinct().count().toDouble
     // empty graph → empty rank frame (the 1/np init would ANSI-throw)
     if (np == 0.0)
@@ -94,7 +95,7 @@ object WalkRank {
     val edgesF = e0
       .withColumn("dn", count(lit(1)).over(Window.partitionBy(col("o"))))
       .withColumn("dp", count(lit(1)).over(Window.partitionBy(col("p"))))
-      .localCheckpoint()
+      .transform(Cut(_))
     val seeds = seedWeights
       .select(col(pCol).as("p"), col(wCol).cast("double").as("w"))
       .groupBy(col("p")).agg(sum(col("w")).as("w"))
@@ -106,7 +107,7 @@ object WalkRank {
     val wTot = wTotRow.getDouble(0)
     require(wTot > 0.0, "seed weights must have positive total mass")
     // t_p = w/Σw on seeds; the whitelist is broadcast-small by premise
-    val seedsN = seeds.select(col("p"), (col("w") / wTot).as("t")).localCheckpoint()
+    val seedsN = Cut(seeds.select(col("p"), (col("w") / wTot).as("t")))
     // intermediate rank frames hold only REACHED parts: a part with zero
     // rank contributes exactly zero to every walk sum, so dropping it is
     // exact — the full part set is restored once, on the final output.

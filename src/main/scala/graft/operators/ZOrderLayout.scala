@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Cut
 
 /** Multi-dimensional data layout via Z-ordering (Morton order) — the
   * storage-side complement of the scan-pruning machinery in
@@ -184,7 +185,7 @@ object ZOrderLayout {
         // otherwise each re-run the coded+Hilbert projection (the q253
         // rule; the index itself is the codegen'd graft_hilbert since r12)
         HilbertCurve.withHilbert(coded, "__cv", col("ca"), col("cb"), bits)
-          .localCheckpoint()
+          .transform(Cut(_))
       else coded.withColumn("__cv", interleave(col("ca"), col("cb"), bits))
     val ranked = graft.functions.DistributedRank
       .withRowNumberAndTotal(curved, "__rn", "__n",

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Cut, Tables}
 import graft.functions.DedupFunctions.shingleRows
 import graft.functions.DistributedRank
 import graft.functions.TextFunctions.fingerprint
@@ -359,7 +359,7 @@ object CorpusOpsQueries extends QueryPack {
         Tables.documents(s, d).select($"doc_id", h.as("hk")),
         "rn", "n", $"hk", $"doc_id")
       .select($"doc_id", $"rn", $"n")
-      .localCheckpoint() // both join sides + 3 offsets read it
+      .transform(Cut(_)) // both join sides + 3 offsets read it
     val offsets = ranked
       .select($"doc_id", $"rn", $"n",
         explode(array(lit(1L), lit(2L), lit(3L))).as("j"))
@@ -1578,7 +1578,7 @@ object CorpusOpsQueries extends QueryPack {
       // each action re-encodes the whole corpus, and the pack censuses'
       // multiply-referencing plans duplicated the encode subtree up to
       // 130× (q240's r12 before-plan). O(docs) × 2 narrow columns.
-      .localCheckpoint()
+      .transform(Cut(_))
   }
   /** Doc-boundary-aware packing census — the ACTING counterpart of
     * q239's packing-purity audit, via [[graft.operators.SeqPacker]]
@@ -1708,7 +1708,7 @@ object CorpusOpsQueries extends QueryPack {
     // mutates the files this frame is derived from
     val affected = SeqPacker.readShards(s, tmp)._1
       .where($"docId" % 97 === 13)
-      .select($"lang", $"bucket").distinct().localCheckpoint()
+      .select($"lang", $"bucket").distinct().transform(Cut(_))
     // the deletion list needs only ids — derived from `documents`, not
     // the BPE-count frame (ids absent from the export are harmless to
     // the footprint semi join, and this skips a tokenizing recompute)
@@ -1770,7 +1770,7 @@ object CorpusOpsQueries extends QueryPack {
     // write/overwrite cost here is per-DIRECTORY commit work, not data
     // — measured 8x fewer dirs ~= 8x cheaper end-to-end at the probe
     val placed = SeqPacker.packDocs(packKeyed(perDoc0, 512L), 512)
-      .toDF().localCheckpoint()
+      .toDF().transform(Cut(_))
     val tmp = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), "graft_stream_q258").toString
     Seq(0L, 1L, 2L).foreach { b =>
@@ -1781,7 +1781,7 @@ object CorpusOpsQueries extends QueryPack {
     // contract — no disk round trip before the forget mutates files)
     val affected = placed
       .where($"docId" % 97 === 13)
-      .select($"lang", $"bucket".as("shard")).distinct().localCheckpoint()
+      .select($"lang", $"bucket".as("shard")).distinct().transform(Cut(_))
     StreamingExport.forget(s, tmp,
       Tables.documents(s, d).where($"doc_id" % 97 === 13)
         .select($"doc_id"),
@@ -1822,7 +1822,7 @@ object CorpusOpsQueries extends QueryPack {
       // offsets join) re-planned per reference and blew the pack
       // censuses' plans up to 4 000+ lines (q240/q243 r12 before-plans).
       // O(docs) × 5 narrow columns.
-      .localCheckpoint()
+      .transform(Cut(_))
   }
 
   /** ROUND-9 FLAGSHIP composition — the complete model-governed export
@@ -1858,12 +1858,7 @@ object CorpusOpsQueries extends QueryPack {
     // whole-corpus scoring, and three census branches — each action
     // re-ran the tokenize+label scan before the cut (A/B probed: warm
     // 5.3 s with the cut vs 6.7 s without at sf0.1)
-    val docsAll = Tables.documents(s, d)
-      .where($"text".isNotNull && $"doc_id".isNotNull && $"source".isNotNull)
-      .select($"doc_id", $"lang",
-        array_contains(tokens($"text"), "dup").cast("long").as("y"),
-        $"text")
-      .localCheckpoint()
+    val docsAll = TextQueries.labelledDocs(s, d, "lang")
     val train = docsAll.where($"doc_id" % 7 =!= 0)
     val trToks = train.select($"doc_id", explode(tokens($"text")).as("tok"))
     val trFeats = LogReg.features(trToks, "doc_id", "tok", DIMS, binary = true)
@@ -1877,7 +1872,7 @@ object CorpusOpsQueries extends QueryPack {
     // scoring chain (corpus tokenize + features + model join) before
     // the cut. O(kept docs) × 1 column.
     val kept = LogReg.score(allFeats, w, "doc_id")
-      .where($"logit_w" <= 0L).select($"doc_id").localCheckpoint()
+      .where($"logit_w" <= 0L).select($"doc_id").transform(Cut(_))
     val perDoc0 = q223PerDoc(s, d).where($"toks" > 0)
       .join(kept, Seq("doc_id"), "left_semi")
       .join(docsAll.select($"doc_id", $"lang"), Seq("doc_id"))
@@ -1967,7 +1962,7 @@ object CorpusOpsQueries extends QueryPack {
         sum(weight16(bucket($"tok", 1024), "hlmw")).as("logit16"))
       .select($"doc_id", $"n_tok",
         expr("n_uniq * 1000000 DIV n_tok").as("uniq_ppm"), $"logit16")
-      .localCheckpoint()
+      .transform(Cut(_))
     val r1 = DistributedRank.withRowNumber(
       sig.select($"doc_id", $"n_tok"), "r1", -$"n_tok", $"doc_id")
       .select($"doc_id", $"r1")
@@ -2370,7 +2365,7 @@ object CorpusOpsQueries extends QueryPack {
       .withColumn("hk", graft.functions.DedupFunctions.hash32(
         concat(lit("epoch:"), $"doc_id".cast("string"))))
       .withColumn("okey", $"lang_id" * lit(4294967296L) + $"hk")
-      .localCheckpoint()
+      .transform(Cut(_))
     val pref = graft.functions.DistributedRank
       .withRunningTotal(keyed, "rt", $"tok", $"okey", $"doc_id")
       .withColumn("pref", $"rt" - $"lang_base")
@@ -2589,7 +2584,7 @@ object CorpusOpsQueries extends QueryPack {
       .where($"toks" > 0)
       // checkpoint-once (r12): the running-total pass is two actions
       // (boundary sampling + main) — each re-ran the BPE count encoder
-      .localCheckpoint()
+      .transform(Cut(_))
     val h = graft.functions.DedupFunctions.hash32(
       concat(lit("pack:"), $"doc_id".cast("string")))
     val spans = graft.functions.DistributedRank

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Cut, Tables}
 import graft.functions.TextFunctions.{fingerprint, isStopword, qualityScoreOf, stopwordRatioOf, tokens}
 import graft.functions.DedupFunctions._
 import graft.functions.VectorFunctions.{dot, l2norm}
@@ -395,7 +395,7 @@ object DedupQueries extends QueryPack {
     val nh = 16
     val sig = graft.operators.NearDup
       .minhashSignature(Tables.documents(s, d), "doc_id", "text", K, nh)
-      .localCheckpoint() // ONE signature pass feeds candidates AND both compare sides
+      .transform(Cut(_)) // ONE signature pass feeds candidates AND both compare sides
     val bands = sig
       .select($"doc_id", posexplode(array(lshBandCols(4, 4): _*)))
       .toDF("doc_id", "band_idx", "band_hash")
@@ -697,7 +697,7 @@ object DedupQueries extends QueryPack {
     // and the diverging aggregates defeat ReuseExchange, so the
     // scan→window→distinct chain runs twice — measured FASTER than
     // materializing it at every probed scale (10×/30×: 3.5/5.8 s here vs
-    // 6.1/8.2 s with persist(), 6.2/15.6 s with localCheckpoint(), which
+    // 6.1/8.2 s with persist(), 6.2/15.6 s with an eager local cut, which
     // also hides stats from AQE and demotes the owner join to sort-merge).
     // Two fully-pipelined codegen'd passes beat one materialization
     // barrier; if a true 100 TB run is scan-dominated, persist the
@@ -1025,7 +1025,7 @@ object DedupQueries extends QueryPack {
       val base = graft.functions.DistributedRank
         .withRunningTotal(ord0, "segU", $"isEval", $"rn")
         .withColumn("segD", lit(nEval) - $"segU" + $"isEval")
-        .localCheckpoint()
+        .transform(Cut(_))
       val l2 = base.select(($"rn" - 1L).as("rn"), $"l".as("l2"))
       val wUp = Window.partitionBy($"segU").orderBy($"rn")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1142,7 +1142,7 @@ object DedupQueries extends QueryPack {
     // final action re-derived the nested LSH/decontam pipelines per
     // reference (the q240 plan-duplication class)
     val st = CorpusPipeline.build(docs.where($"doc_id" % 97 =!= 0), cfg,
-      cut = _.localCheckpoint())
+      cut = Cut(_))
     CorpusPipeline.dropReasons(st, cfg)
       .unionByName(st.result.select($"doc_id",
         lit("7_kept").as("stage"), lit("kept").as("reason")))

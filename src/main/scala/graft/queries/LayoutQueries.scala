@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Cut, Tables}
 import graft.operators.{HilbertCurve, ZOrderLayout}
 import graft.functions.DistributedRank
 
@@ -91,7 +91,7 @@ object LayoutQueries extends QueryPack {
     // coded frame (two rank boundary scans + the two-branch main pass),
     // each re-running the scan + stats crossJoin + code/Morton
     // arithmetic before the cut. One narrow 6-column materialization.
-    val c = coded(s, d).localCheckpoint()
+    val c = Cut(coded(s, d))
     census(ranked(c, "zv"), "zorder")
       .unionByName(census(ranked(c, "ca"), "linear"))
       .select($"layout", $"pid", $"n_rows",
@@ -118,7 +118,7 @@ object LayoutQueries extends QueryPack {
     // materialization, then every consumer reads the truncated lineage.
     val c = HilbertCurve.withHilbert(coded(s, d), "hd", col("ca"), col("cb"), BITS)
       .select($"l_orderkey", $"l_linenumber", $"ca", $"cb", $"zv", $"hd")
-      .localCheckpoint()
+      .transform(Cut(_))
     census(ranked(c, "hd"), "hilbert")
       .unionByName(census(ranked(c, "zv"), "zorder"))
       .select($"layout", $"pid", $"n_rows", $"box_area",

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.Tables
+import graft.core.{Cut, Tables}
 import graft.functions.VectorFunctions._
 import graft.operators.VectorIndex
 
@@ -368,7 +368,7 @@ object SimilarityQueries extends QueryPack {
     * driver-collected centers as inlined literal arrays — KB-sized, no
     * join) closed by a TakeOrdered(1); nothing but single rows ever
     * collects. At production k (thousands) the same selection sequence
-    * runs with a localCheckpointed running-min column (one narrow pass
+    * runs with a Cut running-min column (one narrow pass
     * per pick instead of re-evaluating k literal dots); the fixture form
     * keeps the plan stateless. Distances are round-6 so the argmax order
     * is the q51 cross-engine double contract. */
@@ -1046,7 +1046,7 @@ object SimilarityQueries extends QueryPack {
     val schema = VectorIndex.codesSchema("vec_id")
     val before = s.read.schema(schema).parquet(path + "/codes")
       .groupBy($"cluster").agg(count(lit(1)).as("n_before"))
-      .localCheckpoint()
+      .transform(Cut(_))
     val del = Tables.embeddings(s, d)
       .where($"vec_id".isNotNull && $"vec_id" % 97 === 0)
       .select($"vec_id")
@@ -1153,7 +1153,7 @@ object SimilarityQueries extends QueryPack {
       .where($"doc_id".isNotNull && $"text".isNotNull &&
         length(trim($"text")) > 0)
       .select($"doc_id", $"text", $"lang", $"n_chars")
-      .localCheckpoint() // five artifact builds consume it; scan once
+      .transform(Cut(_)) // five artifact builds consume it; scan once
     // the five stand-ups are disjoint trees — build them CONCURRENTLY
     // (the ErasureHub.run drain rationale: each is fixed-job-count
     // dominated; wall time = slowest build, not the sum)

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Cut, Tables}
 import graft.functions.TextFunctions._
 
 /** Text-analysis operators for the training-data pipeline (SURVEY H-8):
@@ -1044,7 +1044,7 @@ object TextQueries extends QueryPack {
     val perDoc = scored.groupBy($"doc_id", $"lang")
       .agg(count(lit(1)).as("n_bg"), sum($"mb").as("nll"))
       .select($"doc_id", $"lang", $"n_bg", expr("nll DIV n_bg").as("mbpt"))
-      .localCheckpoint()
+      .transform(Cut(_))
     val cuts = perDoc.groupBy($"lang")
       .agg(expr("approx_percentile(mbpt, array(0.3333334, 0.6666668), 1000000)")
         .as("cs"))
@@ -1446,15 +1446,10 @@ object TextQueries extends QueryPack {
     // join AND (via feats) both the trainer's lf materialization and
     // the scoring pass — each action re-ran the corpus tokenize before
     // the cut. feats likewise feeds two actions (train, score).
-    val docs = Tables.documents(s, d)
-      .where($"text".isNotNull && $"doc_id".isNotNull && $"source".isNotNull)
-      .select($"doc_id", $"source",
-        array_contains(tokens($"text"), "dup").cast("long").as("y"),
-        $"text")
-      .localCheckpoint()
+    val docs = labelledDocs(s, d, "source")
     val toks = docs.select($"doc_id", explode(tokens($"text")).as("tok"))
     val feats = LogReg.features(toks, "doc_id", "tok", DIMS, binary = true)
-      .localCheckpoint()
+      .transform(Cut(_))
     val labels = LogReg.balancedLabels(docs.select($"doc_id", $"y"), "doc_id")
     val w = LogReg.train(feats, labels, "doc_id",
       iters = ITERS, etaLog2 = 2, decay = true, weightCol = Some("wt"))
@@ -1503,12 +1498,7 @@ object TextQueries extends QueryPack {
     val ITERS = 8
     // checkpoint-once (r12): both slices and the final census re-read
     // docs across several actions — tokenize + label once
-    val docs = Tables.documents(s, d)
-      .where($"text".isNotNull && $"doc_id".isNotNull && $"source".isNotNull)
-      .select($"doc_id", $"source",
-        array_contains(tokens($"text"), "dup").cast("long").as("y"),
-        $"text")
-      .localCheckpoint()
+    val docs = labelledDocs(s, d, "source")
     val train = docs.where($"doc_id" % 7 =!= 0)
     val eval = docs.where($"doc_id" % 7 === 0)
     val trToks = train.select($"doc_id", explode(tokens($"text")).as("tok"))
@@ -1554,6 +1544,21 @@ object TextQueries extends QueryPack {
     calibrationParts(s, d)._3.orderBy($"tau")
   }
 
+  /** The labelled corpus q222, q242, q246 and q247/q248 train and score
+    * on: documents with text, doc_id and source present, as (doc_id,
+    * `group`, y = 1 when the text has a "dup" token, text), cut once —
+    * each consumer re-reads it across several actions (checkpoint-once,
+    * r12). */
+  private[queries] def labelledDocs(s: SparkSession, d: String, group: String)
+      : DataFrame = {
+    import s.implicits._
+    Cut(Tables.documents(s, d)
+      .where($"text".isNotNull && $"doc_id".isNotNull && $"source".isNotNull)
+      .select($"doc_id", col(group),
+        array_contains(tokens($"text"), "dup").cast("long").as("y"),
+        $"text"))
+  }
+
   /** Shared q247/q248 machinery: (labeled docs, trained weights,
     * unordered per-τ confusion sweep) — one definition so the curve
     * q248 selects its operating point from is EXACTLY the curve q247
@@ -1567,12 +1572,7 @@ object TextQueries extends QueryPack {
     // checkpoint-once (r12): the labeled corpus feeds the train slice
     // (features + labels), the eval slice (features + scored join) and
     // q248's whole-corpus scoring/census — one tokenize+label pass
-    val docs = Tables.documents(s, d)
-      .where($"text".isNotNull && $"doc_id".isNotNull && $"source".isNotNull)
-      .select($"doc_id", $"source",
-        array_contains(tokens($"text"), "dup").cast("long").as("y"),
-        $"text")
-      .localCheckpoint()
+    val docs = labelledDocs(s, d, "source")
     val train = docs.where($"doc_id" % 7 =!= 0)
     val eval = docs.where($"doc_id" % 7 === 0)
     val trToks = train.select($"doc_id", explode(tokens($"text")).as("tok"))

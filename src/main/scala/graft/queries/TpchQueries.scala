@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.SparkSession
-import graft.core.Tables
+import graft.core.{Cut, Tables}
 
 /** The 22 standard TPC-H queries as ONE SQL text each, run VERBATIM by
   * both engines (round 11, VERDICT r10 #5): the fixtures are TPC-H-
@@ -472,12 +472,12 @@ object TpchQueries extends QueryPack {
     s.conf.set("spark.sql.cbo.enabled", "true")
     s.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
     try
-      // materialize INSIDE the conf window (eager localCheckpoint of
+      // materialize INSIDE the conf window (eager Cut of
       // the O(nations) result): a lazily-returned frame would be
       // re-planned by the consumer's own QueryExecution after the
       // finally restores the confs — the reordered plan must be the
       // one that actually runs
-      s.sql(text).localCheckpoint()
+      Cut(s.sql(text))
     finally {
       s.conf.set("spark.sql.cbo.enabled", prev._1)
       s.conf.set("spark.sql.cbo.joinReorder.enabled", prev._2)

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.hadoop.fs.{FileSystem, Path}
+import graft.core.Cut
 
 /** The ONE commit/manifest protocol layer shared by every persisted
   * artifact (VERDICT r9 #5): [[graft.operators.SeqPacker]] (shard
@@ -318,7 +319,7 @@ object ArtifactCommit {
     val pending = (readIdsWal(spark, ext, idCol).toSeq ++
       readIdsWal(spark, inTree, idCol).toSeq)
       .reduceOption(_.unionByName(_).distinct())
-      .map(_.localCheckpoint()) // the files behind it are about to go
+      .map(Cut(_)) // the files behind it are about to go
     pending.foreach(ids => writeIdsWal(ids, ext))
     build
     pending.foreach(applyForget)

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
+import graft.core.Cut
 
 /** Sources and sinks (SURVEY §2.1).
   *
@@ -250,7 +251,7 @@ object IoOps {
         .repartition(filesPerDay)
         // materialize BEFORE the write: Spark (correctly) refuses to
         // overwrite a path its own plan is still reading from
-        .localCheckpoint()
+        .transform(Cut(_))
         .write
         .option("partitionOverwriteMode", "dynamic")
         .mode(SaveMode.Overwrite)

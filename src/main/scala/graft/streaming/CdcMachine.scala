@@ -24,8 +24,8 @@ private[streaming] final case class CdcState(nOps: Long, nDeletes: Long,
 /** Streaming CDC apply — the incremental twin of batch q227
   * (`queries/EtlQueries`): per key, keep the operation with the maximal
   * (seqUs, opId) plus running op/delete counts, in O(1) typed state per
-  * key on RocksDB (the transformWithState shape of OnlineStatusProcessor
-  * / ConcurrencyMachine). A key whose winner is a tombstone is a DEAD
+  * key on RocksDB (the transformWithState shape of FunnelMachine /
+  * ConcurrencyMachine). A key whose winner is a tombstone is a DEAD
   * key: it stays in state (a later out-of-order upsert with a higher seq
   * may revive it) but a snapshot consumer filters `isDel`. Because the
   * winner is the max over a TOTAL order, the final state is independent

@@ -66,7 +66,7 @@ object FunnelMachine {
   }
 
   /** Wire the machine onto a funnel-event stream. Requires the RocksDB
-    * state store provider (same contract as onlineStatusV2). */
+    * state store provider, as transformWithState does. */
   def funnelSteps(events: Dataset[FunnelEvent])(
       implicit s: SparkSession): Dataset[FunnelStep] = {
     import s.implicits._

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions.fingerprint
 import graft.operators.NearDup
+import graft.core.Cut
 
 /** Streaming incremental corpus dedup — the per-micro-batch realization
   * of q106 (`queries/CorpusOpsQueries`): every arriving document is
@@ -39,7 +40,7 @@ object StreamingDedup {
     * index at `indexDir`, write the batch's fingerprint/band rows into
     * the index under its `batchId`, and return the verdicts
     * `(doc_id, verdict)`. The returned frame is materialized
-    * (localCheckpoint) BEFORE the index write — its plan reads the index
+    * (through [[graft.core.Cut]]) BEFORE the index write — its plan reads the index
     * lazily, so writing first would make every document match itself.
     * Membership reads skip `batch_id = batchId` and the write overwrites
     * exactly that partition, so a retried batch never sees (or
@@ -94,7 +95,7 @@ object StreamingDedup {
               .when($"is_near" === 1, "near_dup")
               .otherwise("new").as("verdict"))
           // eager: must be computed before the appends below
-          .localCheckpoint()
+          .transform(Cut(_))
 
         def writeIdx(df: DataFrame, p: Path): Unit =
           df.withColumn("batch_id", lit(batchId))

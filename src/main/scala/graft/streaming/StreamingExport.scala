@@ -4,6 +4,7 @@ import graft.operators.SeqPacker
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.core.Cut
 
 /** Streaming shard EXPORT — lands [[StreamingPacker]]'s emissions on
   * disk incrementally, completing stream → pack → artifact (batch
@@ -57,7 +58,7 @@ object StreamingExport {
     // manifest agg — and a redelivered frame may be derived from the
     // very batch_id subtree the deletes below are about to drop
     val df = placed.select(col("lang"), col("bucket"), col("ord1"),
-      col("ord2"), col("docId"), col("size"), col("seq")).localCheckpoint()
+      col("ord2"), col("docId"), col("size"), col("seq")).transform(Cut(_))
     fs.delete(dataP, true)
     fs.delete(manP, true)
     df.repartition(col("lang"), col("bucket"))
@@ -158,7 +159,7 @@ object StreamingExport {
     val del = graft.sources.ArtifactCommit
       .readIdsWal(spark, pendingIds, "docId")
       .map(delNew.unionByName(_).distinct()).getOrElse(delNew)
-      .localCheckpoint()
+      .transform(Cut(_))
     val placed = readPlaced(spark, dir)
     val hitAgg = placed.join(del, Seq("docId"), "left_semi")
       .groupBy(col("batch_id"), col("lang"), col("bucket"))
@@ -191,7 +192,7 @@ object StreamingExport {
       .join(del, Seq("docId"), "left_anti")
       .select(col("ord1"), col("ord2"), col("docId"), col("size"),
         col("seq"), col("batch_id"), col("lang"), col("bucket"))
-      .localCheckpoint()
+      .transform(Cut(_))
     // hash-repartition on the partition key before the dynamic
     // overwrite (the appendBatch rule): without it every task opens a
     // writer per touched leaf dir — a corpus-tracking deletion list
@@ -218,7 +219,7 @@ object StreamingExport {
       .agg(count(lit(1)).as("n_pieces"),
         sum(col("size")).as("sum_tokens"),
         SeqPacker.pieceChecksum.as("checksum"))
-      .localCheckpoint()
+      .transform(Cut(_))
     touchedBatches.foreach { b =>
       val dataB = new org.apache.hadoop.fs.Path(s"$dir/data/batch_id=$b")
       val manB = new org.apache.hadoop.fs.Path(s"$dir/manifest/batch_id=$b")
@@ -281,7 +282,7 @@ object StreamingExport {
     val newData = placed
       .withColumn("batch_id",
         when(col("batch_id") < cut, lit(-1L)).otherwise(col("batch_id")))
-      .localCheckpoint()
+      .transform(Cut(_))
     val newMan = manAll
       .withColumn("batch_id",
         when(col("batch_id") < cut, lit(-1L)).otherwise(col("batch_id")))
@@ -289,7 +290,7 @@ object StreamingExport {
       .agg(sum(col("n_pieces")).as("n_pieces"),
         sum(col("sum_tokens")).as("sum_tokens"),
         bit_xor(col("checksum")).as("checksum"))
-      .localCheckpoint()
+      .transform(Cut(_))
     graft.sources.ArtifactCommit.swap(spark, s"$dir/data") { tmp =>
       newData.repartition(col("lang"), col("bucket"))
         .write.partitionBy("batch_id", "lang", "bucket").parquet(tmp)

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured-Streaming operators (SURVEY §2.10).
   *
@@ -78,10 +77,10 @@ object StreamingOps {
         updateUser(idleTimeout))
   }
 
-  /** The transition function itself, shared by the V1 (GroupState) and V2
-    * (StatefulProcessor) machines so both APIs run ONE set of semantics.
-    * Events are applied in event-time order (the reference pre-sorts with
-    * a window-max per batch, `UserStatusByRunLog.scala:125-132`). */
+  /** The transition function itself, apart from the GroupState plumbing
+    * in [[updateUser]]. Events are applied in event-time order (the
+    * reference pre-sorts with a window-max per batch,
+    * `UserStatusByRunLog.scala:125-132`). */
   private[streaming] def applyEvents(uid: Long, start: UserOnlineStatus,
       events: Iterator[PlayEvent]): (UserOnlineStatus, Seq[StatusChange]) = {
     var st = start
@@ -128,46 +127,6 @@ object StreamingOps {
     state.update(st)
     idleTimeout.foreach(state.setTimeoutDuration)
     out.iterator
-  }
-
-  /** R4 on the Spark 4 arbitrary-state V2 API (`transformWithState`):
-    * same transitions via [[applyEvents]], state in a typed
-    * [[ValueState]] with engine-managed TTL instead of hand-set
-    * ProcessingTimeTimeout. transformWithState REQUIRES the RocksDB
-    * state store provider — which is the point at scale: typed state
-    * columns, per-state TTL, and disk-backed keyed state compose into
-    * the billion-user form of the reference's Phoenix snapshot. */
-  final class OnlineStatusProcessor(idleTtl: Option[java.time.Duration])
-      extends StatefulProcessor[Long, PlayEvent, StatusChange] {
-    @transient private var state: ValueState[UserOnlineStatus] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      val ttl = idleTtl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
-      state = getHandle.getValueState[UserOnlineStatus](
-        "status", Encoders.product[UserOnlineStatus], ttl)
-    }
-
-    override def handleInputRows(uid: Long, events: Iterator[PlayEvent],
-        timerValues: TimerValues): Iterator[StatusChange] = {
-      val st0 =
-        if (state.exists()) state.get()
-        else UserOnlineStatus(uid, online = false, 0L, "0", 0L)
-      val (st, out) = applyEvents(uid, st0, events)
-      state.update(st)
-      out.iterator
-    }
-  }
-
-  /** Online-status machine on transformWithState; semantically identical
-    * to [[onlineStatus]] (StreamingOpsSpec replays the same input through
-    * both and asserts equal output). TTL needs processing time. */
-  def onlineStatusV2(events: Dataset[PlayEvent],
-      idleTtl: Option[java.time.Duration] = Some(java.time.Duration.ofHours(2)))(
-      implicit s: SparkSession): Dataset[StatusChange] = {
-    import s.implicits._
-    val mode = if (idleTtl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-    events.groupByKey(_.userId)
-      .transformWithState(new OnlineStatusProcessor(idleTtl), mode, OutputMode.Append())
   }
 
   /** Node-time counters (R6): tumbling windows per event_type with a

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Cut
 
 /** Streaming span scrub — the ingestion-time form of q134
   * (`queries/DedupQueries`): each arriving document is rebuilt from
@@ -79,7 +80,7 @@ object StreamingSpanScrub {
         .select($"doc_id", $"n_spans",
           coalesce($"n_kept", lit(0L)).as("n_kept"),
           coalesce($"clean_text", lit("")).as("clean_text"))
-        .localCheckpoint() // eager: compute before the append below
+        .transform(Cut(_)) // eager: compute before the append below
       keptSpans.select($"h").distinct()
         .withColumn("batch_id", lit(batchId))
         .write.mode(SaveMode.Overwrite)

@@ -9,13 +9,14 @@ import org.apache.spark.sql.functions._
   * implementations token-for-token: the dataframe surfaces
   * [[BpeTrainer.tokenize]] / [[BpeTrainer.countTokens]] /
   * [[BpeTrainer.countTokensCurve]] must return row-identical results to
-  * [[BpeTrainer.tokenizeTyped]] / `countTokensTyped` /
+  * [[BpeExprSpec.tokenizeTyped]] / `countTokensTyped` /
   * `countTokensCurveTyped` on the committed vocabulary, on random
   * trained lists over random corpora, and on adversarial texts
   * (whitespace framing, control chars, non-vocab unicode, aliasing
   * merges). Also asserts the plan claim: the encode path carries no
   * typed-map boundary (`MapElements` / object ser/de) any more. */
 class BpeExprSpec extends SparkSpec {
+  import BpeExprSpec._
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -23,17 +24,17 @@ class BpeExprSpec extends SparkSpec {
   private def checkAll(docs: DataFrame, merges: Seq[(String, String)],
       sizes: Seq[Int], tag: String): Unit = {
     assert(rows(BpeTrainer.tokenize(docs, "doc_id", "text", merges)) ==
-      rows(BpeTrainer.tokenizeTyped(docs, "doc_id", "text", merges)),
+      rows(tokenizeTyped(docs, "doc_id", "text", merges)),
       s"$tag: tokenize expression != typed map")
     // countTokensTyped NPEs on null text (pre-r13 behavior); compare on
     // the non-null subset, where the expression must agree exactly
     val nn = docs.where(col("text").isNotNull)
     assert(rows(BpeTrainer.countTokens(nn, "doc_id", "text", merges)) ==
-      rows(BpeTrainer.countTokensTyped(nn, "doc_id", "text", merges)),
+      rows(countTokensTyped(nn, "doc_id", "text", merges)),
       s"$tag: countTokens expression != typed map")
     if (merges.nonEmpty)
       assert(rows(BpeTrainer.countTokensCurve(docs, "doc_id", "text", merges, sizes)) ==
-        rows(BpeTrainer.countTokensCurveTyped(docs, "doc_id", "text", merges, sizes)),
+        rows(countTokensCurveTyped(docs, "doc_id", "text", merges, sizes)),
         s"$tag: countTokensCurve expression != typed map")
   }
 
@@ -93,5 +94,81 @@ class BpeExprSpec extends SparkSpec {
     assert(!plan.contains("MapElements"), s"typed map survived:\n$plan")
     assert(!plan.contains("DeserializeToObject"), s"object ser/de survived:\n$plan")
     assert(plan.contains("graft_bpe_ntokens"), s"native expression missing:\n$plan")
+  }
+}
+
+/** The pre-r13 typed-map encoders, kept in test scope as the reference
+  * the native expressions are checked against. */
+object BpeExprSpec {
+  import BpeTrainer.{encodeWord, heapApplyCounts, ranksOf}
+
+  /** The pre-r13 typed-map tokenize — the reference implementation
+    * BpeExprSpec pins [[BpeTrainer.tokenize]] against (same fold-pinned
+    * [[encodeWord]] per word, same null-as-empty framing). */
+  private[graft] def tokenizeTyped(docs: DataFrame, idCol: String,
+      textCol: String, merges: Seq[(String, String)]): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(ranksOf(merges))
+    docs.select(col(idCol).cast("long"), col(textCol))
+      .as[(Long, String)]
+      .map { case (id, text) =>
+        val toks = Option(text).getOrElse("").trim.split("\\s+").iterator
+          .filter(_.nonEmpty)
+          .flatMap(w => encodeWord(w, bc.value))
+          .toSeq
+        (id, toks, toks.size.toLong)
+      }
+      .toDF(idCol, "bpe_tokens", "n_bpe_tokens")
+  }
+
+  /** The pre-r13 typed-map curve — BpeExprSpec's reference for
+    * [[BpeTrainer.countTokensCurve]]. */
+  private[graft] def countTokensCurveTyped(docs: DataFrame, idCol: String,
+      textCol: String, merges: Seq[(String, String)],
+      sizes: Seq[Int]): DataFrame = {
+    require(sizes.nonEmpty && sizes.forall(k => k >= 0 && k <= merges.size),
+      s"curve sizes must lie in [0, ${merges.size}] (got $sizes)")
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val nRanks = merges.size
+    val bcR = spark.sparkContext.broadcast(ranksOf(merges))
+    val bcS = spark.sparkContext.broadcast(sizes.toIndexedSeq)
+    docs.select(col(idCol).cast("long"), col(textCol))
+      .as[(Long, String)]
+      .flatMap { case (id, text) =>
+        val perRank = new Array[Long](nRanks + 1)
+        var chars = 0L
+        Option(text).getOrElse("").trim.split("\\s+").iterator
+          .filter(_.nonEmpty)
+          .foreach { w =>
+            chars += w.length
+            val c = heapApplyCounts(w, bcR.value, nRanks)
+            var i = 0
+            while (i < c.length) { perRank(i + 1) += c(i); i += 1 }
+          }
+        // prefix sums in place: perRank(k) = applications below rank k
+        var i = 1
+        while (i < perRank.length) { perRank(i) += perRank(i - 1); i += 1 }
+        bcS.value.map(k => (id, k.toLong, chars - perRank(k)))
+      }
+      .toDF(idCol, "n_merges", "n_bpe_tokens")
+  }
+
+  /** The pre-r13 typed-map count — BpeExprSpec's reference for
+    * [[BpeTrainer.countTokens]]. */
+  private[graft] def countTokensTyped(docs: DataFrame, idCol: String,
+      textCol: String, merges: Seq[(String, String)]): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(ranksOf(merges))
+    docs.select(col(idCol).cast("long"), col(textCol))
+      .as[(Long, String)]
+      .map { case (id, text) =>
+        val toks = text.trim.split("\\s+").iterator.filter(_.nonEmpty)
+          .map(w => encodeWord(w, bc.value).size.toLong).sum
+        (id, toks)
+      }
+      .toDF(idCol, "n_bpe_tokens")
   }
 }

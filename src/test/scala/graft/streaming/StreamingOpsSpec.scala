@@ -201,42 +201,6 @@ class StreamingOpsSpec extends SparkSpec {
     assert(spark.table("dedup_t").count() == 2)
   }
 
-  test("onlineStatusV2 (transformWithState) replays identically to the V1 machine") {
-    implicit val s: org.apache.spark.sql.SparkSession = spark
-    import s.implicits._
-    implicit val sc: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val conf = spark.conf
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = conf.getOption(key)
-    try {
-      // transformWithState supports only the RocksDB provider
-      conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val batches = Seq(
-        Seq(PlayEvent(1L, ts(0), "start", "svc-a"),
-          PlayEvent(2L, ts(1), "heartbeat", "?")),
-        Seq(PlayEvent(1L, ts(60), "finish", "svc-a"),
-          PlayEvent(1L, ts(120), "start", "svc-b"),
-          PlayEvent(2L, ts(130), "finish", "?")))
-      def run(v2: Boolean): Seq[StatusChange] = {
-        val in = MemoryStream[PlayEvent]
-        val ds = if (v2) StreamingOps.onlineStatusV2(in.toDS(), idleTtl = None)
-          else StreamingOps.onlineStatus(in.toDS(), idleTimeout = None)
-        val name = if (v2) "online_v2_t" else "online_v1_t"
-        val q = ds.writeStream.format("memory").queryName(name)
-          .outputMode("append").start()
-        batches.foreach { b => in.addData(b); q.processAllAvailable() }
-        q.stop()
-        spark.table(name).as[StatusChange].collect().toSeq
-          .sortBy(c => (c.userId, c.atMs))
-      }
-      assert(run(v2 = true) == run(v2 = false))
-    } finally saved match {
-      case Some(v) => conf.set(key, v)
-      case None => conf.unset(key)
-    }
-  }
-
   test("stateful ops run on the RocksDB state store (the 100 TB state backend)") {
     // HDFS-backed state lives on the executor heap; RocksDB spills keyed
     // state to local disk, which is what makes billion-key streaming
