@@ -109,7 +109,7 @@ private[graft] final class BpeTable(val pairs: Array[(String, String)])
     var epoch = 0
     val tally = new Array[Long](nRanks)
   }
-  @transient private lazy val scratchTl: ThreadLocal[Scratch] =
+  @transient private[expressions] lazy val scratchTl: ThreadLocal[Scratch] =
     ThreadLocal.withInitial(() => new Scratch)
 
   @inline private def heapPush(sc: Scratch, v: Int): Unit = {
@@ -159,6 +159,11 @@ private[graft] final class BpeTable(val pairs: Array[(String, String)])
     }
     var n = len
     if (n < 2 || nRanks == 0) return n
+    // on wrap an old mark would equal a new epoch and skip its rank
+    if (sc.epoch == Int.MaxValue) {
+      java.util.Arrays.fill(sc.seenEpoch, 0)
+      sc.epoch = 0
+    }
     sc.epoch += 1
     val ep = sc.epoch
     sc.heapN = 0
@@ -280,7 +285,8 @@ private[graft] final class BpeTable(val pairs: Array[(String, String)])
 }
 
 private[graft] object BpeTable {
-  /** Build from the foldable array<array<string>> merges literal. */
+  /** Build from the foldable array<array<string>> merges literal, once
+    * [[checkMerges]] has accepted it. */
   def fromLiteral(mergesExpr: Expression): BpeTable = {
     val arr = mergesExpr.eval().asInstanceOf[ArrayData]
     val pairs = Array.tabulate(arr.numElements()) { i =>
@@ -295,10 +301,21 @@ private[graft] object BpeTable {
       case ArrayType(ArrayType(StringType, _), _) => true
       case _ => false
     })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
+    if (!ok) return TypeCheckResult.TypeCheckFailure(
       s"$name requires a foldable array<array<string>> merge list, got " +
         mergesExpr.dataType.simpleString)
+    val arr = mergesExpr.eval().asInstanceOf[ArrayData]
+    if (arr == null)
+      return TypeCheckResult.TypeCheckFailure(s"$name requires a non-null merge list")
+    val bad = (0 until arr.numElements()).find { i =>
+      arr.isNullAt(i) || {
+        val p = arr.getArray(i)
+        p.numElements() < 2 || p.isNullAt(0) || p.isNullAt(1)
+      }
+    }
+    bad.fold[TypeCheckResult](TypeCheckResult.TypeCheckSuccess)(i =>
+      TypeCheckResult.TypeCheckFailure(
+        s"$name merge $i is not a pair of non-null strings"))
   }
 }
 
@@ -397,9 +414,13 @@ case class BpeCurve(first: Expression, second: Expression, third: Expression)
       case _ => false
     })
     if (!sizesOk)
-      TypeCheckResult.TypeCheckFailure(
+      return TypeCheckResult.TypeCheckFailure(
         s"$prettyName requires a foldable array<bigint> prefix-size list, got " +
           third.dataType.simpleString)
+    val arr = third.eval().asInstanceOf[ArrayData]
+    if (arr == null || (0 until arr.numElements()).exists(arr.isNullAt))
+      TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires a prefix-size list with no nulls")
     else if (!sizes.forall(k => k >= 0 && k <= table.nRanks))
       TypeCheckResult.TypeCheckFailure(
         s"$prettyName sizes must lie in [0, ${table.nRanks}] (got ${sizes.toSeq})")

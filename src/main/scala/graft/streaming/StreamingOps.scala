@@ -54,25 +54,37 @@ object StreamingOps {
     * Transition rules mirror `UserStatusByRunLog.scala:224-291`; the
     * full-outer-join against the previous snapshot becomes GroupState.
     *
-    * With the default `idleTimeout` the query runs
-    * `ProcessingTimeTimeout`, under which Spark plans another
-    * micro-batch on every trigger to check for expired groups: the
-    * query never goes idle, so `StreamingQuery.processAllAvailable()`
-    * never returns, and the default trigger commits an empty batch
-    * between data batches. Callers should start the query with a
-    * `Trigger.ProcessingTime` interval. */
+    * Eviction runs on event time. A user with no event for
+    * `idleTimeout` of event time (default 24 hours, the reference's
+    * realtime retention, `NodeTime.scala:27-35`) is dropped from the
+    * state, so a later `start` counts from 1 again. The timeout fires
+    * once the watermark passes the user's latest event + `idleTimeout`.
+    *
+    * The watermark is kept on the event's hour (`date_trunc("HOUR",
+    * ts)`), not on `ts`. Spark plans an extra, data-less micro-batch only
+    * when the eviction watermark advances: on `ts` that is after every
+    * data batch, on the hour it is once per event-time hour. So the
+    * query goes idle between triggers and `processAllAvailable()`
+    * returns. The delay is 2 hours of that clock, because Spark drops
+    * rows at or below the watermark: every event up to an hour late is
+    * still applied, one up to two hours late may be, and any later one
+    * is dropped (the reference keeps no late data at all, R9).
+    *
+    * `idleTimeout = None` evicts nothing and sets no watermark, so no
+    * row counts as late (deterministic tests, epoch-0 timestamps). */
   def onlineStatus(events: Dataset[PlayEvent],
-      idleTimeout: Option[String] = Some("2 hours"))(
+      idleTimeout: Option[String] = Some("24 hours"))(
       implicit s: SparkSession): Dataset[StatusChange] = {
     import s.implicits._
-    // ProcessingTimeTimeout + per-group remove(): without eviction the
-    // state store would hold every userId ever seen for the life of the
-    // query (the reference relied on Phoenix-side retention instead).
-    // idleTimeout=None disables eviction (deterministic tests).
-    val timeout =
-      if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events.groupByKey(_.userId)
+    val (input, timeout) = idleTimeout match {
+      case Some(_) =>
+        // the extra hour column stays in the plan under .as[PlayEvent]
+        (events.withColumn("event_hour", date_trunc("HOUR", col("ts")))
+          .withWatermark("event_hour", "2 hours").as[PlayEvent],
+          GroupStateTimeout.EventTimeTimeout)
+      case None => (events, GroupStateTimeout.NoTimeout)
+    }
+    input.groupByKey(_.userId)
       .flatMapGroupsWithState(OutputMode.Append, timeout)(
         updateUser(idleTimeout))
   }
@@ -121,11 +133,20 @@ object StreamingOps {
       state.remove()
       return Iterator.empty
     }
+    val batch = events.toArray
     val st0 = state.getOption.getOrElse(
       UserOnlineStatus(uid, online = false, 0L, "0", 0L))
-    val (st, out) = applyEvents(uid, st0, events)
+    val (st, out) = applyEvents(uid, st0, batch.iterator)
     state.update(st)
-    idleTimeout.foreach(state.setTimeoutDuration)
+    // Spark calls this only for groups with events, each above the
+    // watermark, so the deadline cannot fall below it. It counts from
+    // the latest event, not from lastSeenMs: unknown kinds and a second
+    // finish leave lastSeenMs behind, possibly below the watermark. A
+    // late batch must not pull back the deadline of a user seen later.
+    idleTimeout.foreach { horizon =>
+      val latest = batch.iterator.map(_.ts.getTime).max
+      state.setTimeoutTimestamp(math.max(latest, st0.lastSeenMs), horizon)
+    }
     out.iterator
   }
 

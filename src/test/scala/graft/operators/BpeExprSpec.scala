@@ -84,6 +84,44 @@ class BpeExprSpec extends SparkSpec {
     checkAll(docs, Nil, Seq(0), "empty merges")
   }
 
+  test("null merges, short merge pairs and null sizes are rejected at analysis, not with an NPE") {
+    graft.expressions.GraftFunctions.ensureRegistered(spark)
+    val merges = "array(array('a', 'b'))"
+    val nullMerges = "CAST(NULL AS array<array<string>>)"
+    val nullPair = "array(array('a', 'b'), CAST(NULL AS array<string>))"
+    val nullElem = "array(array('a', CAST(NULL AS string)))"
+    val single = "array(array('a', 'b'), array('ab'))"
+    val sizes = "array(CAST(1 AS bigint))"
+    // every call reaches the function both as raw SQL and through
+    // call_function, each with the same SQL literals
+    def rejected(fn: String, hint: String, args: String*): Unit = {
+      val sql = intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql(s"SELECT $fn('ab ab', ${args.mkString(", ")})").collect())
+      assert(sql.getMessage.contains(hint), sql.getMessage)
+      val api = intercept[org.apache.spark.sql.AnalysisException](
+        spark.range(1).select(call_function(fn, (lit("ab ab") +: args.map(expr)): _*))
+          .collect())
+      assert(api.getMessage.contains(hint), api.getMessage)
+    }
+    for (fn <- Seq("graft_bpe_ntokens", "graft_bpe_tokens")) {
+      rejected(fn, "requires a non-null merge list", nullMerges)
+      rejected(fn, "merge 1 is not a pair of non-null strings", nullPair)
+      rejected(fn, "merge 0 is not a pair of non-null strings", nullElem)
+      rejected(fn, "merge 1 is not a pair of non-null strings", single)
+    }
+    rejected("graft_bpe_curve", "requires a non-null merge list", nullMerges, sizes)
+    rejected("graft_bpe_curve", "merge 1 is not a pair of non-null strings", nullPair, sizes)
+    rejected("graft_bpe_curve", "merge 0 is not a pair of non-null strings", nullElem, sizes)
+    rejected("graft_bpe_curve", "requires a prefix-size list with no nulls",
+      merges, "CAST(NULL AS array<bigint>)")
+    rejected("graft_bpe_curve", "requires a prefix-size list with no nulls",
+      merges, "array(CAST(1 AS bigint), CAST(NULL AS bigint))")
+    // the same calls with valid literals still run
+    assert(spark.sql(s"SELECT graft_bpe_ntokens('ab ab', $merges)").head().getLong(0) == 2L)
+    assert(spark.sql(s"SELECT graft_bpe_curve('ab ab', $merges, $sizes)")
+      .head().getSeq[org.apache.spark.sql.Row](0).map(_.getLong(1)) == Seq(2L))
+  }
+
   test("plan: the countTokens encode path has no typed-map boundary (MapElements/ser-de gone)") {
     val s = spark
     val docs = graft.core.Tables.documents(s, sfDir)

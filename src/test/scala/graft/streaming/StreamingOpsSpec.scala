@@ -2,11 +2,52 @@ package graft.streaming
 
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
 import java.sql.Timestamp
+import scala.concurrent.{Await, ExecutionContext, Future, TimeoutException}
+import scala.concurrent.duration._
 
 class StreamingOpsSpec extends SparkSpec {
 
   private def ts(sec: Long) = new Timestamp(sec * 1000L)
+
+  // 2024-01-01T00:00:00Z, on an hour: the event-time watermark starts at
+  // 0, so rows near the epoch would count as late
+  private val base = 1704067200L
+  private def at(h: Int, m: Int) = ts(base + h * 3600L + m * 60L)
+  private val day = 24 * 3600 * 1000L
+
+  /** processAllAvailable(), failing instead of hanging when the query
+    * never goes idle. */
+  private def drain(q: StreamingQuery): Unit =
+    try Await.result(Future(q.processAllAvailable())(ExecutionContext.global), 60.seconds)
+    catch {
+      case _: TimeoutException =>
+        q.stop()
+        fail("processAllAvailable() did not return within 60 s: the query never went idle")
+    }
+
+  /** Runs the default `onlineStatus` (event-time eviction) over one
+    * micro-batch per entry of `batches`, each drained before the next is
+    * added. Returns the emitted changes, ordered by user then time, and
+    * the query's progress reports. */
+  private def runDefault(name: String, batches: Seq[PlayEvent]*)
+      : (Seq[StatusChange], Seq[StreamingQueryProgress]) = {
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    import s.implicits._
+    implicit val sc: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val in = MemoryStream[PlayEvent]
+    val q = StreamingOps.onlineStatus(in.toDS())
+      .writeStream.format("memory").queryName(name)
+      .outputMode("append").start()
+    try {
+      batches.foreach { b => in.addData(b); drain(q) }
+      val progress = q.recentProgress.toSeq
+      val out = spark.table(name).as[StatusChange].collect().toSeq
+        .sortBy(c => (c.userId, c.atMs))
+      (out, progress)
+    } finally q.stop()
+  }
 
   test("onlineStatus state machine across micro-batches") {
     implicit val s: org.apache.spark.sql.SparkSession = spark
@@ -111,11 +152,117 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("state machine evicts on timeout") {
+    // the watermark has passed the deadline set at the user's last event
     val st = new TestGroupState[UserOnlineStatus]
-    st.update(UserOnlineStatus(7L, online = true, 3L, "svc", 0L))
+    st.update(UserOnlineStatus(7L, online = true, 3L, "svc", at(0, 10).getTime))
+    st.setTimeoutTimestamp(at(0, 10).getTime, "24 hours")
+    st.setWatermarkMs(at(25, 0).getTime)
     st.setTimedOut(true)
-    val out = StreamingOps.updateUser(Some("2 hours"))(7L, Iterator.empty, st).toSeq
+    val out = StreamingOps.updateUser(Some("24 hours"))(7L, Iterator.empty, st).toSeq
     assert(out.isEmpty && st.getOption.isEmpty)
+    assert(st.timeoutTimestampMs.isEmpty, "a removed user keeps no timeout")
+  }
+
+  test("updateUser sets the timeout at the latest event + horizon, never below the watermark") {
+    val horizon = Some("24 hours")
+    // three events out of order: the deadline counts from the latest
+    val st = new TestGroupState[UserOnlineStatus]
+    st.setWatermarkMs(at(8, 0).getTime)
+    StreamingOps.updateUser(horizon)(1L, Iterator(
+      PlayEvent(1L, at(10, 30), "heartbeat", "a"),
+      PlayEvent(1L, at(10, 50), "finish", "a"),
+      PlayEvent(1L, at(10, 5), "start", "a")), st).toSeq
+    assert(st.timeoutTimestampMs.contains(at(10, 50).getTime + day))
+    assert(st.timeoutDurationMs.isEmpty, "eviction runs on event time only")
+
+    // only unknown kinds: lastSeenMs stays 0, the deadline still follows
+    // the events (from lastSeenMs it would fall below the watermark)
+    val unknown = new TestGroupState[UserOnlineStatus]
+    unknown.setWatermarkMs(at(30, 0).getTime)
+    StreamingOps.updateUser(horizon)(2L, Iterator(
+      PlayEvent(2L, at(31, 15), "pause", "a"),
+      PlayEvent(2L, at(31, 20), "seek", "a")), unknown).toSeq
+    assert(unknown.get.lastSeenMs == 0L)
+    assert(unknown.timeoutTimestampMs.contains(at(31, 20).getTime + day))
+
+    // an offline user's second finish leaves lastSeenMs an hour behind
+    val finish = new TestGroupState[UserOnlineStatus]
+    finish.update(UserOnlineStatus(3L, online = false, 4L, "a", at(5, 0).getTime))
+    finish.setWatermarkMs(at(28, 0).getTime)
+    val out = StreamingOps.updateUser(horizon)(3L, Iterator(
+      PlayEvent(3L, at(30, 0), "finish", "a")), finish).toSeq
+    assert(out.isEmpty && finish.get.lastSeenMs == at(5, 0).getTime)
+    assert(finish.timeoutTimestampMs.contains(at(30, 0).getTime + day))
+
+    // a late batch does not pull back the deadline of a user seen later
+    val late = new TestGroupState[UserOnlineStatus]
+    late.update(UserOnlineStatus(4L, online = true, 1L, "a", at(12, 0).getTime))
+    late.setWatermarkMs(at(10, 0).getTime)
+    StreamingOps.updateUser(horizon)(4L, Iterator(
+      PlayEvent(4L, at(11, 10), "heartbeat", "a")), late).toSeq
+    assert(late.timeoutTimestampMs.contains(at(12, 0).getTime + day))
+
+    // the test double rejects what Spark's GroupStateImpl rejects
+    intercept[IllegalArgumentException](unknown.setTimeoutTimestamp(0L, "24 hours"))
+  }
+
+  test("default onlineStatus goes idle: processAllAvailable() returns, one empty batch per event-time hour") {
+    val (out, progress) = runDefault("online_idle",
+      Seq(PlayEvent(1L, at(0, 10), "start", "a"), PlayEvent(2L, at(0, 11), "heartbeat", "?")),
+      Seq(PlayEvent(1L, at(0, 40), "finish", "a")),
+      Seq(PlayEvent(1L, at(0, 50), "start", "b")),
+      Seq(PlayEvent(1L, at(1, 5), "finish", "b")))
+    assert(out.map(c => (c.userId, c.online, c.playCount)) == Seq(
+      (1L, true, 1L), (1L, false, 1L), (1L, true, 2L), (1L, false, 2L),
+      (2L, true, 0L)))
+    // four data batches; the watermark moved after the first (from 0)
+    // and after the fourth (a new hour): a batch on every trigger would
+    // leave one empty batch after each data batch. Idle triggers report
+    // progress too, but run no batch (no addBatch phase).
+    val ran = progress.filter(_.durationMs.containsKey("addBatch"))
+    val empty = ran.count(_.numInputRows == 0)
+    assert(ran.size - empty == 4 && empty == 2,
+      ran.map(p => s"batch ${p.batchId}: ${p.numInputRows} rows").mkString("; "))
+  }
+
+  test("default onlineStatus evicts a user idle past 24 h of event time, keeps one idle for less") {
+    val (out, _) = runDefault("online_evict",
+      Seq(PlayEvent(1L, at(0, 10), "start", "a"), PlayEvent(2L, at(0, 10), "start", "a")),
+      // user 2 stays active; user 1 goes quiet
+      Seq(PlayEvent(2L, at(20, 0), "heartbeat", "a")),
+      // user 3 moves the watermark to hour 25, past user 1's deadline
+      // (00:10 + 24 h) but not past user 2's (20:00 + 24 h)
+      Seq(PlayEvent(3L, at(27, 30), "heartbeat", "c")),
+      Seq(PlayEvent(1L, at(28, 0), "start", "b"), PlayEvent(2L, at(28, 0), "start", "b")))
+    assert(out.map(c => (c.userId, c.online, c.playCount, c.service)) == Seq(
+      (1L, true, 1L, "a"), (1L, true, 1L, "b"),
+      (2L, true, 1L, "a"), (2L, true, 2L, "b"),
+      (3L, true, 0L, "0")))
+  }
+
+  test("default onlineStatus applies an event 59 minutes late across an hour, drops one past the tolerance") {
+    val (out, _) = runDefault("online_late",
+      Seq(PlayEvent(1L, at(10, 30), "start", "a")),
+      Seq(PlayEvent(2L, at(11, 1), "start", "a")),
+      // watermark: hour 11 - 2 h = hour 9. User 3's start (hour 10) is
+      // 59 minutes behind the latest event and is applied; user 4's
+      // (hour 8, 2 h 2 min behind) falls at or below the watermark
+      Seq(PlayEvent(3L, at(10, 2), "start", "a"), PlayEvent(4L, at(8, 59), "start", "a")))
+    assert(out.map(c => (c.userId, c.atMs)) == Seq(
+      (1L, at(10, 30).getTime), (2L, at(11, 1).getTime), (3L, at(10, 2).getTime)))
+  }
+
+  test("default onlineStatus survives an evicted user's lone second finish") {
+    // user 1 goes offline at 00:20 and is evicted once user 2 moves the
+    // watermark to hour 28; its next event, a finish, changes nothing
+    // and leaves lastSeenMs at 0, far below the watermark
+    val (out, _) = runDefault("online_finish",
+      Seq(PlayEvent(1L, at(0, 10), "start", "a"), PlayEvent(1L, at(0, 20), "finish", "a")),
+      Seq(PlayEvent(2L, at(30, 0), "start", "b")),
+      Seq(PlayEvent(1L, at(30, 5), "finish", "a")),
+      Seq(PlayEvent(1L, at(30, 10), "start", "c")))
+    assert(out.map(c => (c.userId, c.online, c.playCount)) == Seq(
+      (1L, true, 1L), (1L, false, 1L), (1L, true, 1L), (2L, true, 1L)))
   }
 
   test("intervalJoin correlates two streams within the horizon") {
@@ -232,24 +379,47 @@ class StreamingOpsSpec extends SparkSpec {
   }
 }
 
-/** Minimal in-memory GroupState for unit-testing transition functions. */
+/** Minimal in-memory GroupState for unit-testing transition functions.
+  * Records the last timeout set and, like Spark's `GroupStateImpl`,
+  * rejects a timeout timestamp below the current watermark. */
 class TestGroupState[S] extends org.apache.spark.sql.streaming.GroupState[S] {
   private var value: Option[S] = None
-  private var removed = false
   private var timedOut = false
+  private var watermarkMs = 0L
+  var timeoutTimestampMs: Option[Long] = None
+  var timeoutDurationMs: Option[Long] = None
   def setTimedOut(v: Boolean): Unit = timedOut = v
+  def setWatermarkMs(ms: Long): Unit = watermarkMs = ms
+  private def durationMs(d: String): Long = {
+    import org.apache.spark.sql.catalyst.util.IntervalUtils
+    IntervalUtils.getDuration(
+      IntervalUtils.stringToInterval(org.apache.spark.unsafe.types.UTF8String.fromString(d)),
+      java.util.concurrent.TimeUnit.MILLISECONDS)
+  }
   override def exists: Boolean = value.isDefined
   override def get: S = value.get
   override def getOption: Option[S] = value
-  override def update(newValue: S): Unit = { value = Some(newValue); removed = false }
-  override def remove(): Unit = { value = None; removed = true }
+  override def update(newValue: S): Unit = value = Some(newValue)
+  override def remove(): Unit = {
+    value = None; timeoutTimestampMs = None; timeoutDurationMs = None
+  }
   override def hasTimedOut: Boolean = timedOut
-  override def setTimeoutDuration(durationMs: Long): Unit = ()
-  override def setTimeoutDuration(duration: String): Unit = ()
-  override def setTimeoutTimestamp(timestampMs: Long): Unit = ()
-  override def setTimeoutTimestamp(timestampMs: Long, additionalDuration: String): Unit = ()
-  override def setTimeoutTimestamp(timestamp: java.sql.Date): Unit = ()
-  override def setTimeoutTimestamp(timestamp: java.sql.Date, additionalDuration: String): Unit = ()
-  override def getCurrentWatermarkMs(): Long = 0L
+  override def setTimeoutDuration(durationMs: Long): Unit =
+    timeoutDurationMs = Some(durationMs)
+  override def setTimeoutDuration(duration: String): Unit =
+    timeoutDurationMs = Some(durationMs(duration))
+  override def setTimeoutTimestamp(timestampMs: Long): Unit = {
+    if (timestampMs < watermarkMs)
+      throw new IllegalArgumentException(
+        s"Timeout timestamp ($timestampMs) cannot be earlier than the current watermark ($watermarkMs)")
+    timeoutTimestampMs = Some(timestampMs)
+  }
+  override def setTimeoutTimestamp(timestampMs: Long, additionalDuration: String): Unit =
+    setTimeoutTimestamp(timestampMs + durationMs(additionalDuration))
+  override def setTimeoutTimestamp(timestamp: java.sql.Date): Unit =
+    setTimeoutTimestamp(timestamp.getTime)
+  override def setTimeoutTimestamp(timestamp: java.sql.Date, additionalDuration: String): Unit =
+    setTimeoutTimestamp(timestamp.getTime, additionalDuration)
+  override def getCurrentWatermarkMs(): Long = watermarkMs
   override def getCurrentProcessingTimeMs(): Long = 0L
 }
