@@ -34,7 +34,7 @@ object PlanDump {
     "q47_minhash_lsh" -> "candidate pairs from a band-bucket equi self-join; scan prunes to (doc_id, text)",
     "q51_knn_brute" -> "broadcast-probe ANN: query vectors broadcast, one corpus scan",
     "q65_halfhour_report" -> "flagship parse→sessionize→enrich→report composition",
-    "q66_multigrain" -> "multi-grain rollup reuses the day-level partial exchange (ReusedExchange)",
+    "q66_multigrain" -> "multi-grain rollup: the day-level partial fans out to every grain in one Generate, then ONE grain-tagged aggregate — one scan, no Union",
     "q77_dedup_keep" -> "O(n) keep/drop suppression — the production dedup shape",
     "q128_bloom_semi_join" -> "bloom probe inside the scan-stage filter, then exact semi-join",
     "q132_topk_agg" -> "typed heap top-k: partial_ (map-side) object aggregation before the exchange",

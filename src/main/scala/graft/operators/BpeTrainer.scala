@@ -407,12 +407,13 @@ object BpeTrainer {
 
   /** Per-doc BPE token count: (idCol, n_bpe_tokens). r13: the native
     * count expression — no token strings, no typed-map boundary, one
-    * codegen'd Project (see [[tokenize]]). */
+    * codegen'd Project (see [[tokenize]]). Null text counts 0 tokens,
+    * as in [[tokenize]] and [[countTokensCurve]]. */
   def countTokens(docs: DataFrame, idCol: String, textCol: String,
       merges: Seq[(String, String)]): DataFrame = {
     graft.expressions.GraftFunctions.ensureRegistered(docs.sparkSession)
     docs.select(col(idCol).cast("long").as(idCol),
-      call_function("graft_bpe_ntokens", col(textCol), mergesLit(merges))
-        .as("n_bpe_tokens"))
+      call_function("graft_bpe_ntokens", coalesce(col(textCol), lit("")),
+        mergesLit(merges)).as("n_bpe_tokens"))
   }
 }

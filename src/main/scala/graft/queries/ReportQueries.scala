@@ -12,8 +12,9 @@ object ReportQueries extends QueryPack {
   /** A16: the reference's full calendar-grain fan
     * (`_by_day/_by_week/_by_month/_by_quarter/_by_year` report tables) from
     * ONE fact scan via [[GrainReports.multiGrainRolled]] (day-grain
-    * partials, exchange-reused across the coarser rollups) — date_trunc
-    * semantics match DuckDB (ISO weeks). */
+    * partials fanned out to every grain and rolled up by one
+    * grain-tagged aggregate) — date_trunc semantics match DuckDB (ISO
+    * weeks). */
   private val q66: Q = (s, d) => {
     import s.implicits._
     GrainReports.multiGrainRolled(

@@ -9,12 +9,12 @@ import org.apache.spark.sql.functions._
   * (`_by_halfhour/_by_day/_by_week/_by_month/_by_quarter/_by_year`, ~40
   * jobs, e.g. `homed/repots/LiveChannelStatistics.scala:176-223`). Here a
   * single parameterized aggregation covers every grain: callers pass the
-  * base facts, dimensions, and metric expressions once.
+  * base facts, dimensions and metric columns once.
   *
-  * Scale: each grain is one hash aggregate over the same scan (Spark
-  * reuses the cached/scanned base via the union); rolling distinct uses
-  * the explode-offsets formulation — a pure hash aggregation — instead of
-  * a theta join, so there is no BNLJ anywhere at 100 TB.
+  * Scale: every grain comes out of one grain-tagged hash aggregate over
+  * one scan; rolling distinct uses the explode-offsets formulation — a
+  * pure hash aggregation — instead of a theta join, so there is no BNLJ
+  * anywhere at 100 TB.
   */
 object GrainReports {
 
@@ -26,23 +26,6 @@ object GrainReports {
     case g => date_trunc(g, ts)
   }
 
-  /** One aggregation per grain over the same base, unioned with a grain
-    * tag column. `metrics` must be pre-aliased aggregate columns.
-    * NOTE: the base is scanned ONCE PER GRAIN (the per-grain bucket
-    * expressions produce different exchanges, so Spark cannot share
-    * them) — prefer [[multiGrainRolled]] for the standard
-    * count/distinct/sum metric shape; keep this generic form (and
-    * `base.cache()` it) only for metrics that cannot be rolled up from
-    * partials (e.g. exact percentiles per grain). */
-  def multiGrain(base: DataFrame, tsCol: String, grains: Seq[String],
-      dims: Seq[String], metrics: Seq[Column]): DataFrame =
-    grains.map { g =>
-      val agged = base
-        .groupBy(bucket(col(tsCol), g).as("bucket") +: dims.map(col): _*)
-        .agg(metrics.head, metrics.tail: _*)
-      agged.select(lit(g).as("grain") +: agged.columns.map(col): _*)
-    }.reduce(_ unionByName _)
-
   /** Grain ordering for [[multiGrainRolled]]: every boundary of a coarser
     * grain is also a boundary of any day-or-finer grain (midnight is
     * halfhour/hour/minute-aligned), so truncating an already-truncated
@@ -53,16 +36,18 @@ object GrainReports {
     "day" -> 4, "week" -> 5, "month" -> 6, "quarter" -> 7, "year" -> 8)
 
   /** Single-scan multi-grain for the standard report metric shape
-    * (`n` = row count, `n_users` = exact distinct of `distinctCol`,
-    * `sum_value` = round(sum(valueCol), roundScale)) — the 100 TB form of
-    * [[multiGrain]]. ONE pass over the base builds additive partials at
-    * (finest-grain bucket × dims × distinct key); each grain then
-    * re-aggregates the partial, whose identical shuffle subtree Spark
-    * dedupes via exchange reuse, so the fact scan happens once no matter
-    * how many grains are requested. Exact countDistinct survives the
-    * rollup because the distinct key is retained in the partial — the
-    * same reason the reference keeps `t_user_array_by_day` at user grain.
-    * Output schema matches [[multiGrain]] with those three metrics. */
+    * (`grain`, `bucket`, dims, `n` = row count, `n_users` = exact distinct
+    * of `distinctCol`, `sum_value` = round(sum(valueCol), roundScale)).
+    * ONE pass over the base builds additive partials at (finest-grain
+    * bucket × dims × distinct key). One `Generate` fans each partial row
+    * out to every grain, tagged with the grain's ordinal and carrying that
+    * grain's bucket, and ONE aggregate keyed by (ordinal, bucket, dims)
+    * rolls all grains up together; the ordinal maps back to the grain
+    * name only after it. So the fact scan, the generated aggregate code
+    * and the job count stay the same however many grains are requested.
+    * Exact countDistinct survives the rollup because the distinct key is
+    * retained in the partial — the same reason the reference keeps
+    * `t_user_array_by_day` at user grain. */
   def multiGrainRolled(base: DataFrame, tsCol: String, grains: Seq[String],
       dims: Seq[String], distinctCol: String, valueCol: String,
       roundScale: Int = 2): DataFrame = {
@@ -74,15 +59,20 @@ object GrainReports {
       .groupBy(bucket(col(tsCol), finest).as("_fb") +: dims.map(col)
         :+ col(distinctCol).as("_k"): _*)
       .agg(count(lit(1)).as("_n"), sum(col(valueCol)).as("_sv"))
-    grains.map { g =>
-      val agged = partial
-        .groupBy(bucket(col("_fb"), g).as("bucket") +: dims.map(col): _*)
-        .agg(
-          sum(col("_n")).as("n"),
-          countDistinct(col("_k")).as("n_users"),
-          round(sum(col("_sv")), roundScale).as("sum_value"))
-      agged.select(lit(g).as("grain") +: agged.columns.map(col): _*)
-    }.reduce(_ unionByName _)
+    val fanned = partial.select(
+      posexplode(array(grains.map(g => bucket(col("_fb"), g)): _*)).as(Seq("_g", "bucket")) +:
+        (dims :+ "_k" :+ "_n" :+ "_sv").map(col): _*)
+    val grainName = grains.init.zipWithIndex.foldRight(lit(grains.last)) {
+      case ((g, i), rest) => when(col("_g") === i, g).otherwise(rest)
+    }
+    fanned
+      .groupBy(col("_g") +: col("bucket") +: dims.map(col): _*)
+      .agg(
+        sum(col("_n")).as("n"),
+        countDistinct(col("_k")).as("n_users"),
+        round(sum(col("_sv")), roundScale).as("sum_value"))
+      .select(grainName.as("grain") +: col("bucket") +:
+        (dims :+ "n" :+ "n_users" :+ "sum_value").map(col): _*)
   }
 
   /** Rolling n-day distinct count per day (the reference's 7d/30d grains,

@@ -261,16 +261,28 @@ class PlanAssertSpec extends SparkSpec {
     assert("HashAggregate".r.findAllIn(p).length >= 2)
   }
 
-  test("q66: rolled multigrain scans the fact table once, reusing the partial exchange") {
-    // AQE only materializes reuse in the final plan, so execute first
-    val df = SparkEntry.queries("q66_multigrain")(spark, sfDir)
+  /** The rolled multigrain shape: one fact scan, every grain out of one
+    * grain-tagged aggregate (no per-grain branch to union), whose one
+    * distinct key plans as a single partial → final distinct chain. */
+  private def assertOneRolledAggregate(name: String): Unit = {
+    val df = SparkEntry.queries(name)(spark, sfDir)
     df.collect()
-    // AQE's toString appends the pre-adaptive "== Initial Plan ==" (which
-    // still shows one scan per grain) — count only the final plan
+    // AQE's toString appends the pre-adaptive "== Initial Plan ==" —
+    // count only the final plan
     val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-    assert("FileScan parquet".r.findAllIn(p).length == 1, "expected a single fact scan")
-    assert("ReusedExchange".r.findAllIn(p).length >= 2,
-      "week/month rollups must reuse the day-partial exchange")
+    assert("FileScan parquet".r.findAllIn(p).length == 1, s"expected a single fact scan:\n$p")
+    assert(!p.contains("Union"), s"grains must not be unioned per-grain branches:\n$p")
+    assert("partial_count\\(distinct ".r.findAllIn(p).length == 1 &&
+      "[^_]count\\(distinct ".r.findAllIn(p).length == 1,
+      s"expected one distinct-aggregate chain:\n$p")
+  }
+
+  test("q66: multigrain scans the fact table once into one grain-tagged aggregate") {
+    assertOneRolledAggregate("q66_multigrain")
+  }
+
+  test("q81: halfhour + day rollup scans once into one grain-tagged aggregate") {
+    assertOneRolledAggregate("q81_framework_halfhour")
   }
 
   test("runtime bloom filter pre-filters the fact side of a selective shuffle join") {

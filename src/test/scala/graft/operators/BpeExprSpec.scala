@@ -122,6 +122,31 @@ class BpeExprSpec extends SparkSpec {
       .head().getSeq[org.apache.spark.sql.Row](0).map(_.getLong(1)) == Seq(2L))
   }
 
+  test("null text counts 0 tokens in countTokens, as in tokenize, countTokensCurve and raw SQL over coalesce") {
+    val s = spark
+    import s.implicits._
+    val ms = Seq(("a", "b"))
+    val docs = Seq((1L, null.asInstanceOf[String]), (2L, ""), (3L, "ab ab"))
+      .toDF("doc_id", "text")
+    val want = Seq("[1,0]", "[2,0]", "[3,2]")
+    assert(rows(BpeTrainer.countTokens(docs, "doc_id", "text", ms)) == want)
+    assert(rows(BpeTrainer.tokenize(docs, "doc_id", "text", ms)
+      .select($"doc_id", $"n_bpe_tokens")) == want)
+    assert(rows(BpeTrainer.countTokensCurve(docs, "doc_id", "text", ms, Seq(1))
+      .select($"doc_id", $"n_bpe_tokens")) == want)
+    // the contract as raw SQL and through call_function: the expression
+    // itself stays null-in/null-out, the dataframe surface coalesces
+    graft.expressions.GraftFunctions.ensureRegistered(spark)
+    docs.createOrReplaceTempView("bpe_null_docs")
+    val merges = "array(array('a', 'b'))"
+    assert(rows(spark.sql(s"SELECT doc_id, graft_bpe_ntokens(coalesce(text, ''), $merges) " +
+      "FROM bpe_null_docs")) == want)
+    assert(rows(docs.select($"doc_id", call_function("graft_bpe_ntokens",
+      coalesce($"text", lit("")), expr(merges)))) == want)
+    assert(spark.sql(s"SELECT graft_bpe_ntokens(CAST(NULL AS string), $merges)")
+      .head().isNullAt(0))
+  }
+
   test("plan: the countTokens encode path has no typed-map boundary (MapElements/ser-de gone)") {
     val s = spark
     val docs = graft.core.Tables.documents(s, sfDir)
