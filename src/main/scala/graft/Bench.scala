@@ -30,7 +30,7 @@ object Bench {
   /** Stale-base audit (round-8 verdict #7, mechanizing CLAUDE.md's
     * bench-base hygiene rule (a)): warn when `BENCH_BASE.json`'s
     * `seeded_epoch` predates the last commit touching a source file
-    * that registers benched queries — the q170 (r6) / q220 (r7)
+    * that registers benched queries (one that defines a `QueryPack`) — the q170 (r6) / q220 (r7)
     * failure class, where a plan rewrite shipped but the quiet base
     * stayed seeded from the pre-rewrite plan and the contention guard
     * graded the wrong thing. Per-file granularity: a commit to the
@@ -46,7 +46,11 @@ object Bench {
       .filter(_.toString.endsWith(".scala")).toVector.sortBy(_.toString)
     files.flatMap { f =>
       val txt = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      val touched = queryNames.filter(n => txt.contains("\"" + n + "\""))
+      // only a pack registers queries: other files that quote a name
+      // (PlanDump's picks, specs) would warn on every benched pick
+      val touched =
+        if (!txt.contains("extends QueryPack")) Nil
+        else queryNames.filter(n => txt.contains("\"" + n + "\""))
       if (touched.isEmpty) None
       else {
         val ce = lastCommitEpoch(f)

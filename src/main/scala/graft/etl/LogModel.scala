@@ -39,16 +39,6 @@ final case class TokenInfo(
     deviceType: Int,
     regionId: Long)
 
-/** One sessionized play interval (SURVEY §2.5 W1: start event paired with
-  * the next event in its (user, device, uri) stream). */
-final case class PlaySession(
-    userId: String,
-    deviceId: Long,
-    uri: String,
-    startTime: java.sql.Timestamp,
-    endTime: java.sql.Timestamp,
-    durationSec: Long)
-
 /** One heartbeat-derived session (SURVEY §2.10 R7/H-2: consecutive beats
   * with gaps ≤ maxGap form a session; online time = beats × interval). */
 final case class HeartbeatSession(

@@ -134,12 +134,6 @@ object LogParsers {
     } catch { case _: NumberFormatException => None }
   }
 
-  /** Typed iacs parse over a line Dataset. */
-  def parseIacs(lines: Dataset[String])(implicit s: SparkSession): Dataset[IacsRecord] = {
-    import s.implicits._
-    lines.flatMap(parseIacsLine(_))
-  }
-
   /** Decode a graft access token: fixed-offset hex fields
     * `uuuuuuuu dddddddd tt rrrrrr` (24 hex chars) →
     * (userId, deviceId, deviceType, regionId). The reference's token

@@ -79,14 +79,14 @@ object BandIndex {
       graft.functions.TextFunctions.fingerprint(col(textCol)).as("fp"))
 
   /** Build + persist the index over `docs` (batch_id −1), atomic via
-    * [[ArtifactCommit.publish]]. */
+    * [[ArtifactCommit.swap]]. */
   def save(docs: DataFrame, idCol: String, textCol: String, dir: String,
       k: Int, nh: Int, b: Int, r: Int, fingerprint: Long,
       nDocs: Long): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
     val meta = Meta(FORMAT, k, nh, b, r, fingerprint, nDocs)
-    ArtifactCommit.publish(spark, dir) { tmp =>
+    ArtifactCommit.swap(spark, dir) { tmp =>
       // hash-repartition on the partition keys before the partitioned
       // writes (the per-directory commit-cost rule)
       bandsOf(docs, idCol, textCol, meta)
@@ -110,8 +110,11 @@ object BandIndex {
     }
   }
 
+  /** The saved meta row, if a complete index exists at `dir` (an
+    * interrupted [[save]] swap is finished first). */
   def readMeta(spark: SparkSession, dir: String): Option[Meta] = {
     val fs = ArtifactCommit.fsOf(spark, dir)
+    ArtifactCommit.recoverSwapAt(spark, dir)
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/meta"))) None
     else spark.read.parquet(s"$dir/meta").collect().headOption
       .map(r => Meta(r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3),
@@ -146,7 +149,7 @@ object BandIndex {
       // carry a crashed forget's commitment across the rebuild via the
       // out-of-tree sidecar (the SuffixIndex.ensure discipline; r10
       // ADVICE — an in-JVM-only capture loses the ids if a crash lands
-      // between the publish and the re-applied forget's own WAL)
+      // between the swap and the re-applied forget's own WAL)
       ArtifactCommit.rebuildWithPending(spark, dir, "doc_id") {
         save(docs, idCol, textCol, dir, k, nh, b, r, fp, nDocs)
       } (ids => forget(spark, dir, ids, "doc_id"))
@@ -220,6 +223,7 @@ object BandIndex {
       delCol: String): ForgetStats = {
     import spark.implicits._
     val fs = ArtifactCommit.fsOf(spark, dir)
+    ArtifactCommit.recoverSwapAt(spark, dir)
     val pending = new org.apache.hadoop.fs.Path(s"$dir/_forget_pending")
     val pendingIds = new org.apache.hadoop.fs.Path(s"$dir/_forget_pending_ids")
     val delNew = delIds.select(col(delCol).cast("long").as("doc_id"))

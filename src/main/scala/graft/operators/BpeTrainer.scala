@@ -189,13 +189,13 @@ object BpeTrainer {
     * one `(rank, lhs, rhs)` row per merge — rank IS the application
     * order, the entire model state — and `meta/` the format version
     * and count. Committed atomically via
-    * [[graft.sources.ArtifactCommit.publish]] (never a partial
+    * [[graft.sources.ArtifactCommit.swap]] (never a partial
     * vocabulary; a rerun converges). KB-scale at production
     * vocabularies (50k rows of short strings). */
   def save(spark: org.apache.spark.sql.SparkSession,
       merges: Seq[(String, String)], dir: String): Unit = {
     import spark.implicits._
-    graft.sources.ArtifactCommit.publish(spark, dir) { tmp =>
+    graft.sources.ArtifactCommit.swap(spark, dir) { tmp =>
       merges.zipWithIndex
         .map { case ((a, b), i) => (i.toLong, a, b) }
         .toDF("rank", "lhs", "rhs")
@@ -212,6 +212,7 @@ object BpeTrainer {
     * tokenizing differently. */
   def load(spark: org.apache.spark.sql.SparkSession,
       dir: String): Seq[(String, String)] = {
+    graft.sources.ArtifactCommit.recoverSwapAt(spark, dir)
     val meta = spark.read.parquet(s"$dir/meta").collect().head
     require(meta.getLong(0) == 1L,
       s"unsupported bpe vocabulary format ${meta.getLong(0)} at $dir")
@@ -237,17 +238,6 @@ object BpeTrainer {
     }
     out.toSeq
   }
-
-  /** Reference encode: fold every merge over the word in learned order,
-    * one [[applyMerge]] pass each — O(nMerges · |word|) per word. This is
-    * the SEMANTIC DEFINITION (what sequential training would leave the
-    * word as); [[encodeWord]] is the production-speed equivalent and
-    * BpeEncoderSpec proves them equal on trained and adversarial lists. */
-  private[operators] def encodeWordFold(word: String,
-      merges: Seq[(String, String)]): Seq[String] =
-    merges.foldLeft(word.map(_.toString): Seq[String]) {
-      case (syms, (a, b)) => applyMerge(syms, a, b)
-    }
 
   /** Merge list → rank lookup. First occurrence wins on a duplicate
     * pair: after pass r merges every (a,b), a later duplicate pass can
@@ -351,32 +341,15 @@ object BpeTrainer {
       call_function("graft_bpe_ntokens", t, m).as("n_bpe_tokens"))
   }
 
-  /** Per-rank application counts of the FULL fold over one word:
-    * counts(i) = how many times merge i fired. Because each firing
-    * drops the symbol count by exactly 1 and a k-prefix encode IS the
-    * fold stopped after rank k, the token count under ANY prefix k is
-    * |chars| − Σ_{i<k} counts(i) — one pass yields the whole
-    * merge-curve (q234's fusion; round-8 verdict #8). Reference
-    * implementation for the spec; the hot path tallies inside the
-    * heap encoder ([[heapApplyCounts]]) instead. */
-  private[operators] def foldApplyCounts(word: String,
-      merges: Seq[(String, String)]): Array[Int] = {
-    var syms: Seq[String] = word.map(_.toString)
-    val counts = new Array[Int](merges.length)
-    var i = 0
-    merges.foreach { case (a, b) =>
-      val before = syms.length
-      syms = applyMerge(syms, a, b)
-      counts(i) = before - syms.length
-      i += 1
-    }
-    counts
-  }
-
-  /** Heap-speed per-rank application counts — equal to
-    * [[foldApplyCounts]] because the heap applies the same ascending
-    * rank sequence over the same intermediate states (BpeEncoderSpec
-    * pins the equality on trained and ScalaCheck-random lists). */
+  /** Heap-speed per-rank application counts: counts(i) = how many
+    * times merge i fired. Because each firing drops the symbol count by
+    * exactly 1 and a k-prefix encode IS the fold stopped after rank k,
+    * the token count under ANY prefix k is |chars| − Σ_{i<k} counts(i)
+    * — one pass yields the whole merge-curve (q234's fusion). Equal to
+    * the fold's per-rank counts because the heap applies the same
+    * ascending rank sequence over the same intermediate states
+    * (BpeEncoderSpec's `foldApplyCounts` reference pins the equality on
+    * trained and random lists). */
   private[operators] def heapApplyCounts(word: String,
       ranks: Map[(String, String), Int], nRanks: Int): Array[Long] = {
     val tally = new Array[Long](nRanks)

@@ -60,25 +60,6 @@ object ProductQuantizer {
     PqModel(m, ks, cbs)
   }
 
-  /** The pre-fusion trainer — m sequential per-subspace
-    * [[KMeans.lloydCentroids]] fits, m×(seeding+iters) corpus scans.
-    * Retained as the equivalence reference for [[train]]'s spec; not a
-    * production path. */
-  private[graft] def trainPerSubspace(embs: DataFrame, idCol: String,
-      vecCol: String, dim: Int, m: Int, ks: Int, iters: Int = 3): PqModel = {
-    require(m >= 1 && dim % m == 0, s"dim $dim must divide into m=$m subspaces")
-    val sub = dim / m
-    val cbs = (0 until m).map { j =>
-      KMeans.lloydCentroids(
-          embs.select(col(idCol), slice(col(vecCol), j * sub + 1, sub).as("subv")),
-          idCol, "subv", k = ks, iters = iters)
-        .collect()
-        .map(r => r.getLong(0) -> r.getSeq[Float](1).toVector)
-        .sortBy(_._1).map(_._2).toVector
-    }.toVector
-    PqModel(m, ks, cbs)
-  }
-
   /** Encode every vector as its `m` nearest-sub-centroid codes:
     * (idCol, codes array<int>). Narrow typed map over a broadcast
     * model — no shuffle. */

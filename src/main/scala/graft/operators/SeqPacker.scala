@@ -221,17 +221,17 @@ object SeqPacker {
     * partitioned by (lang, bucket) — one shard per 64-doc pack bucket,
     * so a trainer reads any shard independently and a census prunes on
     * the partition columns — plus the per-shard [[manifest]] under
-    * `outDir/manifest`. Crash safety is the VectorIndex swap pattern:
-    * everything builds under `outDir.tmp`, then one atomic rename
-    * replaces `outDir`; a rerun after ANY failure converges (stale tmp
-    * deleted first), and a rerun after success is a clean rewrite of
-    * identical content — retry-idempotent, never a partial export. */
+    * `outDir/manifest`. Crash safety is [[graft.sources.ArtifactCommit
+    * .swap]]: everything builds beside `outDir`, then two checked
+    * renames replace it; a rerun after ANY failure converges, and a
+    * rerun after success is a clean rewrite of identical content —
+    * retry-idempotent, never a partial export. */
   def writeShards(packed: Dataset[Placed], outDir: String): Unit = {
     val spark = packed.sparkSession
     // checkpoint once: the pack chain (rank + exchange + fold) would
     // otherwise recompute for the data write AND the manifest agg
     val df = Cut(packed.toDF())
-    graft.sources.ArtifactCommit.publish(spark, outDir) { tmp =>
+    graft.sources.ArtifactCommit.swap(spark, outDir) { tmp =>
       df.repartition(col("lang"), col("bucket"))
         .write.partitionBy("lang", "bucket")
         .parquet(new org.apache.hadoop.fs.Path(tmp, "data").toString)
@@ -242,9 +242,18 @@ object SeqPacker {
 
   /** Reads an export back: (placement rows, manifest). Explicit
     * schemas — see [[shardSchema]]. */
-  def readShards(spark: SparkSession, dir: String): (DataFrame, DataFrame) = (
-    spark.read.schema(shardSchema).parquet(s"$dir/data"),
-    spark.read.schema(manifestSchema).parquet(s"$dir/manifest"))
+  def readShards(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    recover(spark, dir)
+    (spark.read.schema(shardSchema).parquet(s"$dir/data"),
+      spark.read.schema(manifestSchema).parquet(s"$dir/manifest"))
+  }
+
+  /** Finish an interrupted [[writeShards]] swap, then an interrupted
+    * [[forgetShards]] manifest swap. */
+  private def recover(spark: SparkSession, dir: String): Unit = {
+    graft.sources.ArtifactCommit.recoverSwapAt(spark, dir)
+    graft.sources.ArtifactCommit.recoverSwapAt(spark, s"$dir/manifest")
+  }
 
   final case class ForgetShardStats(nForgotten: Long, nRewritten: Long,
     nEmptied: Long)
@@ -278,17 +287,14 @@ object SeqPacker {
     * zero-survivor shards (dynamic overwrite never rewrites those — the
     * round-9 ADVICE hole) still hit even under a disjoint retry list; a
     * retry after full success finds no hits and no sidecar — a zero-op.
-    * An interrupted manifest swap (tmp present, live dir gone) is
-    * completed on entry before anything else. */
+    * An interrupted manifest swap is completed on entry before anything
+    * else. */
   def forgetShards(spark: SparkSession, dir: String, delIds: DataFrame,
       delCol: String, cap: Int): ForgetShardStats = {
     import spark.implicits._
     import graft.sources.ArtifactCommit
     val fs = ArtifactCommit.fsOf(spark, dir)
-    val manPath = new org.apache.hadoop.fs.Path(s"$dir/manifest")
-    val manTmp = new org.apache.hadoop.fs.Path(s"$dir/manifest.tmp")
-    // finish an interrupted manifest swap from a previous attempt
-    ArtifactCommit.recoverSwap(fs, manPath, manTmp)
+    recover(spark, dir)
     val pending = new org.apache.hadoop.fs.Path(s"$dir/_forget_pending")
     val pendingIds = new org.apache.hadoop.fs.Path(s"$dir/_forget_pending_ids")
     val delNew = delIds.select(col(delCol).cast("long").as("docId"))
@@ -340,11 +346,11 @@ object SeqPacker {
         s"$dir/data/lang=$l/bucket=$b"), true)
     }
     // manifest: untouched rows + rows recomputed from the rewrite
-    man.join(touchedDf, Seq("lang", "bucket"), "left_anti")
-      .unionByName(manifest(repacked))
-      .coalesce(1).write.parquet(manTmp.toString)
-    fs.delete(manPath, true)
-    ArtifactCommit.rename(fs, manTmp, manPath)
+    ArtifactCommit.swap(spark, s"$dir/manifest") { tmp =>
+      man.join(touchedDf, Seq("lang", "bucket"), "left_anti")
+        .unionByName(manifest(repacked))
+        .coalesce(1).write.parquet(tmp)
+    }
     fs.delete(pending, false)
     ArtifactCommit.clearIdsWal(fs, pendingIds)
     ForgetShardStats(hitAgg.map(_._3).sum,

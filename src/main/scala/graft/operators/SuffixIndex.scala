@@ -94,11 +94,11 @@ import graft.core.Cut
   *   - PERIODIC compaction ([[compact]] — weekly, or when the band
   *     tier's dup-rate census drifts) folds every pending batch into
   *     the exact ladder in ONE rebuild over base ∪ pending (pending
-  *     wins on a doc_id collision, latest batch first), publishes
-  *     atomically, and clears the ingest tier WITH the same publish
+  *     wins on a doc_id collision, latest batch first), swaps in
+  *     atomically, and clears the ingest tier WITH the same swap
   *     (the whole-tree replace carries no `ingest/`). The pending rows
   *     are first staged to an out-of-tree sidecar so a crash anywhere
-  *     inside the publish window cannot lose them (SuffixIngestSpec
+  *     inside the swap window cannot lose them (SuffixIngestSpec
   *     pins the windows); a crashed [[forget]]'s erasure commitment
   *     rides [[ArtifactCommit.rebuildWithPending]] as in [[ensure]].
   * [[forget]] scrubs the ingest tier too — quarantined raw text is
@@ -185,7 +185,7 @@ object SuffixIndex {
   }
 
   /** Persist a built index: both tables partitioned by doc range + the
-    * meta row, committed atomically via [[ArtifactCommit.publish]]
+    * meta row, committed atomically via [[ArtifactCommit.swap]]
     * (never a partial artifact; a rerun converges). */
   def save(best: DataFrame, order: DataFrame, dir: String,
       fingerprint: Long, nDocs: Long): Unit = {
@@ -205,7 +205,7 @@ object SuffixIndex {
     val grain =
       if (st.isNullAt(0)) 1L
       else math.max(1L, (st.getLong(1) - st.getLong(0) + 64L) / 64L)
-    ArtifactCommit.publish(spark, dir) { tmp =>
+    ArtifactCommit.swap(spark, dir) { tmp =>
       // hash-repartition on the partition key before the partitioned
       // write (the per-directory commit-cost rule): one writer per
       // range, ~64 leaf dirs per table
@@ -226,7 +226,8 @@ object SuffixIndex {
   }
 
   /** The saved meta row, if a complete artifact exists at `dir`.
-    * First finishes an interrupted [[forget]] meta swap — a crash
+    * First finishes an interrupted [[save]] swap of the whole tree,
+    * then an interrupted [[forget]] meta swap — a crash
     * between its two renames leaves `meta` missing with the complete
     * replacement beside it, and without recovery a retried forget
     * would throw "no suffix index" instead of converging (and the
@@ -234,6 +235,7 @@ object SuffixIndex {
     * it exists to surface). */
   def readMeta(spark: SparkSession, dir: String): Option[Meta] = {
     val fs = ArtifactCommit.fsOf(spark, dir)
+    ArtifactCommit.recoverSwapAt(spark, dir)
     ArtifactCommit.recoverSwapAt(spark, s"$dir/meta")
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/meta"))) None
     else spark.read.schema(metaSchema).parquet(s"$dir/meta")
@@ -272,11 +274,11 @@ object SuffixIndex {
           m.fingerprint == fp && m.nDocs == nDocs)
     if (!fresh)
       // a crashed forget's erasure commitment must survive the rebuild
-      // ([[save]]'s whole-tree publish destroys the in-tree sidecars):
+      // ([[save]]'s whole-tree swap destroys the in-tree sidecars):
       // rebuildWithPending persists the captured ids OUTSIDE dir before
-      // the publish and clears that sidecar only after the re-applied
+      // the swap and clears that sidecar only after the re-applied
       // forget commits (r10 ADVICE: the old in-JVM-only capture dropped
-      // the ids on a crash between publish and re-apply). If the corpus
+      // the ids on a crash between swap and re-apply). If the corpus
       // already dropped the docs the re-apply is a clean zero-op.
       ArtifactCommit.rebuildWithPending(spark, dir, "doc_id") {
         val (best, order) = buildTables(toks)
@@ -293,8 +295,8 @@ object SuffixIndex {
     StructField("batch_id", LongType)))
 
   /** Out-of-tree sidecar that carries the pending batches ACROSS a
-    * [[compact]] publish: the whole-tree replace deletes `ingest/`
-    * with the old tree, so a crash inside the publish window would
+    * [[compact]] swap: the whole-tree replace deletes `ingest/`
+    * with the old tree, so a crash inside the swap window would
     * otherwise lose quarantined docs forever (the
     * [[ArtifactCommit.rebuildPendingPath]] rationale, applied to
     * ingest). */
@@ -312,10 +314,10 @@ object SuffixIndex {
       batchId: Long): Unit = {
     require(batchId >= 0L, s"batchId must be >= 0 (got $batchId)")
     // same per-dir lock as ensure/compact (round-12 review): an append
-    // landing between compact's pending read and its publish would
+    // landing between compact's pending read and its swap would
     // write into the OLD tree, which the whole-tree replace deletes —
     // the batch would vanish unfolded. Serialized, the append either
-    // precedes the read (and folds) or follows the publish (and lands
+    // precedes the read (and folds) or follows the swap (and lands
     // in the new tree's quarantine).
     ArtifactCommit.withDirLock(dir) {
     readMeta(spark, dir).getOrElse(
@@ -375,7 +377,7 @@ object SuffixIndex {
     ArtifactCommit.readFrameWal(spark, compactPendingPath(dir),
         ingestSchema)
       // distinct: during a mid-build compact crash the SAME rows sit in
-      // both stores (the sidecar is written before the publish deletes
+      // both stores (the sidecar is written before the swap deletes
       // ingest/) — without it the pending census reads ~2× the real lag
       .map(readPending(spark, dir).unionByName(_).distinct())
       .getOrElse(readPending(spark, dir))
@@ -384,19 +386,19 @@ object SuffixIndex {
     * pending ingest batch into the exact ladder — ONE rebuild over
     * `base ∪ pending`, where a pending doc SHADOWS a base doc with the
     * same id (and within the quarantine the max batch_id wins:
-    * keep-latest). Publishes atomically; the publish's whole-tree
+    * keep-latest). Swaps in atomically; the swap's whole-tree
     * replace itself clears the ingest tier, and the meta fingerprint
     * afterwards describes the MERGED corpus — callers serve it by
     * passing the merged slice to [[ensure]].
     *
     * Crash safety: the pending rows are staged to the out-of-tree
-    * [[compactPendingPath]] sidecar BEFORE the publish can delete
+    * [[compactPendingPath]] sidecar BEFORE the swap can delete
     * their files, and the sidecar is cleared only after the rebuild
     * (and any re-applied erasure commitment — the
     * [[ArtifactCommit.rebuildWithPending]] discipline) committed. Any
     * crash prefix leaves either the in-tree batches or the complete
     * sidecar readable; a retry unions both (idempotent by doc_id /
-    * batch_id) and converges. A retry that lands AFTER the publish but
+    * batch_id) and converges. A retry that lands AFTER the swap but
     * before the sidecar clear detects the already-folded state by
     * fingerprint and skips the rebuild. */
   def compact(dir: String, baseDocs: DataFrame,
@@ -405,6 +407,7 @@ object SuffixIndex {
     import spark.implicits._
     ArtifactCommit.withDirLock(dir) {
     val fs = ArtifactCommit.fsOf(spark, dir)
+    ArtifactCommit.recoverSwapAt(spark, dir) // before the quarantine read
     val sidecar = compactPendingPath(dir)
     // keep-latest within the quarantine: max batch_id wins per doc
     // (pendingDocs = in-tree batches ∪ a crashed compact's sidecar)
@@ -421,7 +424,7 @@ object SuffixIndex {
       fs.delete(new org.apache.hadoop.fs.Path(s"$dir/ingest"), true)
       return read(spark, dir)
     }
-    // checkpoint: the sidecar rewrite and the publish both delete files
+    // checkpoint: the sidecar rewrite and the swap both delete files
     // this frame may read
     val pendCk = Cut(pend)
     val base = baseDocs.select(col("doc_id").cast("long").as("doc_id"),
@@ -429,7 +432,7 @@ object SuffixIndex {
     val merged = base.join(pendCk, Seq("doc_id"), "left_anti")
       .unionByName(pendCk.select($"doc_id", $"text"))
     val (fpM, nM) = fingerprintOf(merged)
-    // already-folded retry (crash between publish and sidecar clear):
+    // already-folded retry (crash between swap and sidecar clear):
     // the stored tree IS the merged corpus — skip the ladder
     val folded = !ArtifactCommit.erasurePending(spark, dir) &&
       !fs.exists(new org.apache.hadoop.fs.Path(s"$dir/ingest")) &&
@@ -461,7 +464,7 @@ object SuffixIndex {
       delCol: String): ForgetStats = {
     import spark.implicits._
     // same per-dir lock as ensure/append/compact (round-12 review): a
-    // lock-free forget racing a compact's publish would have its WAL
+    // lock-free forget racing a compact's swap would have its WAL
     // wiped by the whole-tree replace and the erasure silently lost;
     // Java monitors are reentrant, so compact→forget nesting is safe
     ArtifactCommit.withDirLock(dir) {
@@ -495,7 +498,7 @@ object SuffixIndex {
     // a crashed compact's SIDECAR holds raw text too (round-12 review:
     // without this, a forget completed "successfully" while the
     // condemned doc sat in the sidecar — and the compact retry folded
-    // it back into the published index, resurrecting erased content)
+    // it back into the swapped-in index, resurrecting erased content)
     val sidecarP = compactPendingPath(dir)
     val sidecarDf = ArtifactCommit.readFrameWal(spark, sidecarP,
       ingestSchema)

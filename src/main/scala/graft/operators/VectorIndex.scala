@@ -235,6 +235,7 @@ object VectorIndex {
   /** Load a saved index; model tables collect (KB by construction), the
     * codes frame stays a lazy partitioned scan. Returns (index, idCol). */
   def load(spark: SparkSession, path: String): (Index, String) = {
+    graft.sources.ArtifactCommit.recoverSwapAt(spark, s"$path/codes")
     val meta = spark.read.parquet(s"$path/meta").collect().head
     val (dim, m, ks, idCol) =
       (meta.getInt(0), meta.getInt(1), meta.getInt(2), meta.getString(3))
@@ -271,6 +272,7 @@ object VectorIndex {
     * trade. Caller owns id uniqueness across batches. */
   def appendTo(path: String, idx: Index, idCol: String,
       embs: DataFrame, vecCol: String, batchId: Long): Unit = {
+    graft.sources.ArtifactCommit.recoverSwapAt(embs.sparkSession, s"$path/codes")
     val in = idx.rotation match {
       case Some(r) => Opq.transform(
         embs.where(col(idCol).isNotNull && col(vecCol).isNotNull),
@@ -291,6 +293,7 @@ object VectorIndex {
     * partitioning preserved, search results unchanged (the
     * StreamingCentroidMonitor.compact analog for the codes table). */
   def compactBatches(spark: SparkSession, path: String): Unit = {
+    graft.sources.ArtifactCommit.recoverSwapAt(spark, s"$path/codes")
     val idCol = spark.read.parquet(s"$path/meta").collect().head.getString(3)
     val all = spark.read.schema(codesSchema(idCol)).parquet(s"$path/codes")
       .select(col(idCol), col("cluster"), col("codes"))
@@ -344,6 +347,7 @@ object VectorIndex {
     * which are small). */
   def forget(spark: SparkSession, path: String, delIds: DataFrame,
       delCol: String): ForgetStats = {
+    graft.sources.ArtifactCommit.recoverSwapAt(spark, s"$path/codes")
     val idCol = spark.read.parquet(s"$path/meta").collect().head.getString(3)
     val del = delIds.select(col(delCol).cast("long").as(idCol))
       .where(col(idCol).isNotNull).distinct()

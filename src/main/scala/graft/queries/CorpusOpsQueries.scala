@@ -1647,8 +1647,7 @@ object CorpusOpsQueries extends QueryPack {
     val perDoc0 = q223PerDoc(s, d).where($"toks" > 0)
       .join(lang, Seq("doc_id"))
     val packed = SeqPacker.packDocs(packKeyed(perDoc0), 512)
-    val tmp = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft_shards_q249").toString
+    val tmp = tmpArtifactDir("graft_shards_q249", d)
     SeqPacker.writeShards(packed, tmp)
     val (files, man) = SeqPacker.readShards(s, tmp)
     val census = files.groupBy($"lang", $"bucket")
@@ -1700,8 +1699,7 @@ object CorpusOpsQueries extends QueryPack {
     val perDoc0 = q223PerDoc(s, d).where($"toks" > 0)
       .join(lang, Seq("doc_id"))
     val packed = SeqPacker.packDocs(packKeyed(perDoc0), 512)
-    val tmp = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft_shards_q250").toString
+    val tmp = tmpArtifactDir("graft_shards_q250", d)
     SeqPacker.writeShards(packed, tmp)
     // the pre-forget footprint, read from the WRITTEN export (never a
     // pack recompute) and materialized eagerly — the forget below
@@ -1771,8 +1769,7 @@ object CorpusOpsQueries extends QueryPack {
     // — measured 8x fewer dirs ~= 8x cheaper end-to-end at the probe
     val placed = SeqPacker.packDocs(packKeyed(perDoc0, 512L), 512)
       .toDF().transform(Cut(_))
-    val tmp = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft_stream_q258").toString
+    val tmp = tmpArtifactDir("graft_stream_q258", d)
     Seq(0L, 1L, 2L).foreach { b =>
       StreamingExport.appendBatch(placed.where($"ord1" % 3 === b), tmp, b)
     }

@@ -623,7 +623,7 @@ object SimilarityQueries extends QueryPack {
     .sortBy { case (c, dd) => (dd, c) }.take(2).map(_._1)
 
   /** Build the lifecycle fixture index under a DETERMINISTIC scratch
-    * dir (one per tag, deleted and rebuilt per invocation — a fresh
+    * dir (one per tag and corpus, deleted and rebuilt per invocation — a fresh
     * createTempDirectory each call leaked two fully built indexes per
     * Verify/Bench run, round-7 ADVICE): build (literal cells, REAL
     * residual PQ train + fused encode) on the vec_id%10≠0 slice →
@@ -635,8 +635,7 @@ object SimilarityQueries extends QueryPack {
     val e = Tables.embeddings(s, d)
       .where($"vec_id".isNotNull && $"embedding".isNotNull)
       .select($"vec_id", $"embedding")
-    val tmp = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_lifecycle_$tag").toString
+    val tmp = tmpArtifactDir(s"graft_lifecycle_$tag", d)
     val p = new org.apache.hadoop.fs.Path(tmp)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.delete(p, true)

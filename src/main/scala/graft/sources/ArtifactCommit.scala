@@ -7,29 +7,31 @@ import graft.core.Cut
 /** The ONE commit/manifest protocol layer shared by every persisted
   * artifact (VERDICT r9 #5): [[graft.operators.SeqPacker]] (shard
   * export), [[graft.streaming.StreamingExport]] (streaming export),
-  * [[graft.operators.VectorIndex]] (IVF-PQ index) and
-  * [[graft.operators.SuffixIndex]] (exact-substring index) previously
-  * carried bespoke copies of the same three crash-safety schemes; they
-  * now share these primitives, so a protocol fix lands everywhere at
-  * once (round 9's unchecked-rename and footprint-only-WAL findings
-  * each had to be hunted across call sites — exactly the failure mode
-  * a shared layer removes).
+  * [[graft.operators.VectorIndex]] (IVF-PQ index),
+  * [[graft.operators.SuffixIndex]] (exact-substring index),
+  * [[graft.operators.BandIndex]], the BPE vocabulary,
+  * [[graft.streaming.StreamingCentroidMonitor]] and
+  * [[ParquetUpsertStore]] all commit through these primitives, so a
+  * protocol fix lands everywhere at once (round 9's unchecked-rename
+  * and footprint-only-WAL findings each had to be hunted across call
+  * sites — exactly the failure mode a shared layer removes).
   *
   * Primitives (reference: the reference engine's nightly report jobs
   * re-run whole HiveQL pipelines for crash recovery —
   * `homed/repots/DemandReport.scala`-family; a library artifact store
   * needs real commit protocols instead):
   *
-  *  - [[publish]]: whole-tree REPLACE for offline builds. Everything
-  *    commits under `dir.tmp`, then one delete + rename replaces the
-  *    live tree. A rerun after ANY failure converges (stale tmp deleted
-  *    on entry); never a partial artifact at `dir`.
-  *  - [[swap]]: whole-tree replace for a LIVE-SERVING tree. The
-  *    replacement commits completely in a sibling dir while the live
-  *    tree keeps serving; the cutover is two renames with the old tree
-  *    deleted LAST, so a crash at any step leaves a complete tree on
-  *    disk (worst case the pre-swap one, or a one-rename recovery via
-  *    [[recoverSwap]]).
+  *  - [[swap]]: THE whole-tree replace, for offline builds and
+  *    live-serving trees alike. The replacement commits completely in
+  *    the sibling `<live>_compact_tmp` while the live tree (if any)
+  *    keeps serving; a `_SWAP_READY` marker proves the write finished;
+  *    the cutover is two checked renames (live → `<live>_compact_old`,
+  *    tmp → live) with the old tree deleted LAST. A crash at any step
+  *    leaves a complete tree on disk: the pre-swap one, or the
+  *    replacement one rename away. Owners call [[recoverSwapAt]] before
+  *    they first read or write a swapped tree, so a torn cutover
+  *    serves instead of reading as absent; [[swap]] itself recovers on
+  *    entry.
   *  - footprint WAL ([[writeFootprint]]/[[readFootprint]]): the
   *    partition-scoped erasure intent record — tab-separated key tuples
   *    written BEFORE any mutation, cleared only after the final commit
@@ -46,9 +48,10 @@ import graft.core.Cut
   *    ids lets any retry union them in and converge regardless of its
   *    own list.
   *
-  * All renames are CHECKED: Hadoop `FileSystem.rename` returns false
-  * instead of throwing in several failure cases, and an unchecked false
-  * turns a failed commit into a silent no-op.
+  * All renames are CHECKED and live in this file (ArtifactGuardSpec
+  * keeps it so): Hadoop `FileSystem.rename` returns false instead of
+  * throwing in several failure cases, and an unchecked false turns a
+  * failed commit into a silent no-op.
   */
 object ArtifactCommit {
 
@@ -62,10 +65,10 @@ object ArtifactCommit {
     * shared-artifact contract ("whoever runs first builds; the others
     * serve") was previously held up by scheduling luck — two threads
     * entering `ensure` on the same dir concurrently would BOTH see a
-    * stale fingerprint and race their publishes (one thread's tmp-tree
+    * stale fingerprint and race their swaps (one thread's tmp-tree
     * delete clobbering the other's half-written build). Serializing
     * check-then-build per canonical dir path makes the second thread
-    * re-check freshness after the first's publish and serve instead.
+    * re-check freshness after the first's swap and serve instead.
     * Java monitors are reentrant, so a locked `compact` may call a
     * locked `forget` on the same dir. JVM-scoped by design: the
     * driver/bench/test regime runs one JVM; coordinating across
@@ -80,24 +83,18 @@ object ArtifactCommit {
   def rename(fs: FileSystem, from: Path, to: Path): Unit =
     require(fs.rename(from, to), s"rename $from -> $to failed")
 
-  /** Whole-tree replace for offline builds: `write` receives the tmp
-    * root and must commit the COMPLETE artifact under it; the live tree
-    * is then deleted and the tmp renamed in. Retry-idempotent. */
-  def publish(spark: SparkSession, dir: String)(write: String => Unit): Unit = {
-    val out = new Path(dir)
-    val tmp = new Path(dir + ".tmp")
-    val fs = fsOf(spark, dir)
-    fs.delete(tmp, true) // stale prior-crash leftovers
-    write(tmp.toString)
-    fs.delete(out, true)
-    rename(fs, tmp, out)
-  }
+  /** Sibling-dir suffix of every [[swap]]: `<live>_compact_tmp` and
+    * `<live>_compact_old`. The name predates the offline-build callers;
+    * keeping it means leftovers of earlier crashes are still recognized
+    * and cleaned. */
+  private val SWAP_SUFFIX = "_compact"
 
-  /** Whole-tree replace for a live-serving tree: the replacement
-    * commits beside the live tree, then live→old, tmp→live, old
-    * deleted last. `suffix` names the sibling dirs (kept caller-chosen
-    * so existing on-disk leftovers from pre-unification crashes are
-    * still recognized and cleaned).
+  private def swapTmp(live: Path): Path = new Path(live.toString + SWAP_SUFFIX + "_tmp")
+  private def swapOld(live: Path): Path = new Path(live.toString + SWAP_SUFFIX + "_old")
+
+  /** Whole-tree replace: `write` receives the tmp root and must commit
+    * the COMPLETE replacement under it; then live→old (skipped when
+    * there is no live tree yet), tmp→live, old deleted last.
     *
     * Entry FIRST finishes a prior run's interrupted cutover
     * ([[recoverSwapDir]]): a crash between the two renames leaves live
@@ -106,13 +103,12 @@ object ArtifactCommit {
     * complete copies — every retry would then fail its live→old rename
     * forever (a checked-rename regression the round-10 review caught:
     * the old unchecked code accidentally self-healed). */
-  def swap(spark: SparkSession, livePath: String,
-      suffix: String = "_compact")(write: String => Unit): Unit = {
+  def swap(spark: SparkSession, livePath: String)(write: String => Unit): Unit = {
     val live = new Path(livePath)
-    val tmp = new Path(livePath + suffix + "_tmp")
-    val old = new Path(livePath + suffix + "_old")
+    val tmp = swapTmp(live)
+    val old = swapOld(live)
     val fs = fsOf(spark, livePath)
-    recoverSwapDir(fs, live, tmp, old)
+    recoverSwapDir(fs, live)
     fs.delete(tmp, true); fs.delete(old, true) // stale crash leftovers
     write(tmp.toString)
     // completeness marker, created only AFTER the write closure commits:
@@ -120,7 +116,7 @@ object ArtifactCommit {
     // (provable when live never existed — the r10 ADVICE window; the
     // "_"-prefix keeps it invisible to parquet readers)
     fs.create(new Path(tmp, SWAP_READY), true).close()
-    rename(fs, live, old)
+    if (fs.exists(live)) rename(fs, live, old)
     rename(fs, tmp, live)
     fs.delete(new Path(live, SWAP_READY), false)
     fs.delete(old, true)
@@ -138,9 +134,10 @@ object ArtifactCommit {
     * old). Callers that READ a swapped path outside swap() (e.g. a
     * meta table consulted before the next swap runs) call this first
     * so a torn artifact serves instead of reading as absent. */
-  def recoverSwapDir(fs: FileSystem, live: Path, tmp: Path,
-      old: Path): Unit =
+  private def recoverSwapDir(fs: FileSystem, live: Path): Unit =
     if (!fs.exists(live)) {
+      val tmp = swapTmp(live)
+      val old = swapOld(live)
       if (fs.exists(new Path(tmp, SWAP_READY))) {
         rename(fs, tmp, live)
         fs.delete(new Path(live, SWAP_READY), false)
@@ -152,23 +149,9 @@ object ArtifactCommit {
                                   // complete survives; path reads absent
     }
 
-  /** [[recoverSwapDir]] by path + suffix (the [[swap]] naming). */
-  def recoverSwapAt(spark: SparkSession, livePath: String,
-      suffix: String = "_compact"): Unit = {
-    val fs = fsOf(spark, livePath)
-    recoverSwapDir(fs, new Path(livePath),
-      new Path(livePath + suffix + "_tmp"),
-      new Path(livePath + suffix + "_old"))
-  }
-
-  /** Finish an interrupted single-rename swap from a previous attempt:
-    * live missing but tmp complete ⟹ rename tmp in. (The
-    * [[graft.operators.SeqPacker.forgetShards]] manifest phase uses a
-    * delete-then-rename rather than a full [[swap]] — its tmp is
-    * already the complete replacement.) */
-  def recoverSwap(fs: FileSystem, live: Path, tmp: Path): Unit =
-    if (!fs.exists(live) && fs.exists(tmp))
-      require(fs.rename(tmp, live), s"swap recovery failed: $tmp")
+  /** [[recoverSwapDir]] by live path (the [[swap]] sibling naming). */
+  def recoverSwapAt(spark: SparkSession, livePath: String): Unit =
+    recoverSwapDir(fsOf(spark, livePath), new Path(livePath))
 
   /** Erasure-intent footprint WAL: one tab-separated line per touched
     * partition key tuple, written atomically enough for a text file
@@ -280,9 +263,9 @@ object ArtifactCommit {
   }
 
   /** Sidecar that carries a pending erasure commitment ACROSS a
-    * whole-tree rebuild. It lives OUTSIDE the artifact dir: [[publish]]
-    * deletes the whole live tree (in-tree `_forget_pending*` WALs
-    * included), so a crash between the publish and the re-applied
+    * whole-tree rebuild. It lives OUTSIDE the artifact dir: [[swap]]
+    * deletes the whole old tree (in-tree `_forget_pending*` WALs
+    * included), so a crash between the swap and the re-applied
     * forget's own WAL write would otherwise permanently drop committed
     * deletion ids (the r10 ADVICE medium finding). */
   def rebuildPendingPath(dir: String): Path =
@@ -307,7 +290,7 @@ object ArtifactCommit {
   /** Rebuild an artifact WITHOUT losing a pending erasure commitment:
     * union the in-tree ids WAL with any prior rebuild sidecar, persist
     * the union OUTSIDE the tree, run `build` (which may destroy the
-    * in-tree WALs via [[publish]]), re-apply via `applyForget`, and
+    * in-tree WALs via [[swap]]), re-apply via `applyForget`, and
     * clear the sidecar only after the forget completed. Every crash
     * prefix leaves either the original WALs or the external sidecar
     * readable, so a retry converges. */

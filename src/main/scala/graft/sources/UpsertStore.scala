@@ -20,15 +20,18 @@ final class ParquetUpsertStore(path: String, keys: Seq[String]) extends UpsertSt
 
   override def upsert(rows: DataFrame): Unit = {
     val spark = rows.sparkSession
-    // resolve the filesystem OF THE STORE PATH (not fs.defaultFS — a
-    // store on s3a/file while defaultFS is hdfs would throw "Wrong FS")
-    val storePath = new Path(path)
-    val fs = storePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a crash inside the previous upsert's swap leaves the complete
+    // merged store beside the live path: promote it before the probe
+    ArtifactCommit.recoverSwapAt(spark, path)
     // emptiness is decided by an existence probe, NEVER by catching read
     // errors: a transient read failure mistaken for "empty store" would
-    // delete all accumulated state below
+    // drop all accumulated state below. The filesystem is the STORE
+    // PATH's (not fs.defaultFS — a store on s3a/file while defaultFS is
+    // hdfs would throw "Wrong FS")
     val existing =
-      if (fs.exists(storePath)) Some(spark.read.parquet(path)) else None
+      if (ArtifactCommit.fsOf(spark, path).exists(new Path(path)))
+        Some(spark.read.parquet(path))
+      else None
     // rows feeds both the anti-join key set and the union — persist so
     // the (possibly expensive) upstream plan runs once per upsert
     rows.persist()
@@ -40,25 +43,20 @@ final class ParquetUpsertStore(path: String, keys: Seq[String]) extends UpsertSt
           cur.join(rows.select(keys.map(col): _*).distinct(), keys, "left_anti")
             .unionByName(rows)
       }
-      // rewrite via a temp dir: the plan reads `path` lazily, so writing
-      // over it in place would truncate its own input
-      val tmpPath = new Path(path + ".tmp")
-      merged.write.mode(SaveMode.Overwrite).parquet(tmpPath.toString)
-      // the swap must fail loudly: rename returning false (object-store
-      // quirks, races) with the old path already deleted would otherwise
-      // read as success while the store is gone
-      if (fs.exists(storePath) && !fs.delete(storePath, true))
-        throw new java.io.IOException(s"upsert: failed to delete old store $path")
-      if (!fs.rename(tmpPath, storePath))
-        throw new java.io.IOException(
-          s"upsert: failed to promote $tmpPath to $path (merged data left in .tmp)")
+      // rewrite beside the live store: the plan reads `path` lazily, so
+      // writing over it in place would truncate its own input
+      ArtifactCommit.swap(spark, path) { tmp =>
+        merged.write.mode(SaveMode.Overwrite).parquet(tmp)
+      }
     } finally {
       rows.unpersist()
     }
   }
 
-  override def read(spark: org.apache.spark.sql.SparkSession): DataFrame =
+  override def read(spark: org.apache.spark.sql.SparkSession): DataFrame = {
+    ArtifactCommit.recoverSwapAt(spark, path)
     spark.read.parquet(path)
+  }
 
   /** Wire into a stream: `stream.writeStream.foreachBatch(store.asBatchSink)` —
     * the micro-batch replacement for the reference's per-batch Phoenix

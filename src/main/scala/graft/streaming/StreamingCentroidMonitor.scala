@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.ArtifactCommit
 
 /** Streaming embedding-centroid monitor — the [[graft.operators
   * .SketchRollup]] pre-aggregation architecture applied to embedding
@@ -57,6 +58,9 @@ object StreamingCentroidMonitor {
     * vecCol))`. */
   def sink(storePath: String, labelCol: String,
       vecCol: String): (DataFrame, Long) => Unit = (batch, batchId) => {
+    // a batch landing in a torn store would recreate the live path and
+    // strand the complete compacted table beside it
+    ArtifactCommit.recoverSwapAt(batch.sparkSession, storePath)
     momentTable(batch, labelCol, vecCol)
       .withColumn("batch_id", lit(batchId))
       .write.mode("overwrite")
@@ -71,30 +75,25 @@ object StreamingCentroidMonitor {
     * trigger count ever makes the partition listing itself a cost —
     * the merge is the same associative integer sum that serving does. */
   def compact(spark: SparkSession, storePath: String): Unit = {
+    ArtifactCommit.recoverSwapAt(spark, storePath)
     val all = spark.read.parquet(storePath)
       .groupBy(col("label"), col("i"))
       .agg(sum(col("sv")).as("sv"), sum(col("n")).as("n"))
-    // write-then-rename (round-7 ADVICE, the VectorIndex.compactBatches
-    // contract): the folded table commits completely beside the live
-    // store, the swap is two renames, and the old store is deleted
-    // LAST — a crash at any step leaves a complete, servable table
-    val live = new org.apache.hadoop.fs.Path(storePath)
-    val tmp = new org.apache.hadoop.fs.Path(storePath + ".compact_tmp")
-    val old = new org.apache.hadoop.fs.Path(storePath + ".compact_old")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(tmp, true); fs.delete(old, true) // stale prior-crash leftovers
-    all.withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite").partitionBy("batch_id").parquet(tmp.toString)
-    fs.rename(live, old)
-    fs.rename(tmp, live)
-    fs.delete(old, true)
+    // the folded table commits completely beside the live store and
+    // swaps in with the old store deleted LAST (round-7 ADVICE) — a
+    // crash at any step leaves a complete, servable table
+    ArtifactCommit.swap(spark, storePath) { tmp =>
+      all.withColumn("batch_id", lit(-1L))
+        .write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
+    }
   }
 
   /** Running centroids served from the moment table: (label, n_vecs,
     * centroid array<double>) — the grouped integer sum over per-batch
     * partitions, O(labels·dim·batches) rows read, raw history never
     * touched. */
-  def centroids(spark: SparkSession, storePath: String): DataFrame =
+  def centroids(spark: SparkSession, storePath: String): DataFrame = {
+    ArtifactCommit.recoverSwapAt(spark, storePath)
     spark.read.parquet(storePath)
       .groupBy(col("label"), col("i"))
       .agg(sum(col("sv")).as("sv"), sum(col("n")).as("n"))
@@ -104,6 +103,7 @@ object StreamingCentroidMonitor {
       .agg(sort_array(collect_list(struct(col("i"), col("c"))))
         .getField("c").as("centroid"),
         max(col("n")).as("n_vecs"))
+  }
 
   /** Cosine drift of the served centroids against a frozen reference
     * frame (label, centroid): (label, n_vecs, drift_cos). 1.0 = no

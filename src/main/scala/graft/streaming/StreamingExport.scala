@@ -54,6 +54,9 @@ object StreamingExport {
     val dataP = new org.apache.hadoop.fs.Path(s"$dir/data/batch_id=$batchId")
     val manP = new org.apache.hadoop.fs.Path(s"$dir/manifest/batch_id=$batchId")
     val fs = dataP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a batch landing in a torn tree would recreate the live path and
+    // strand the complete compacted tree beside it
+    recover(spark, dir)
     // checkpoint BEFORE deleting: consumed by the data write AND the
     // manifest agg — and a redelivered frame may be derived from the
     // very batch_id subtree the deletes below are about to drop
@@ -76,8 +79,15 @@ object StreamingExport {
     (batch, batchId) => appendBatch(batch, dir, batchId)
 
   /** All placement rows ever landed (batch_id as a column). */
-  def readPlaced(spark: SparkSession, dir: String): DataFrame =
+  def readPlaced(spark: SparkSession, dir: String): DataFrame = {
+    recover(spark, dir)
     spark.read.schema(dataSchema).parquet(s"$dir/data")
+  }
+
+  /** Finish an interrupted [[compact]] cutover of either tree. */
+  private def recover(spark: SparkSession, dir: String): Unit =
+    Seq("data", "manifest").foreach(t =>
+      graft.sources.ArtifactCommit.recoverSwapAt(spark, s"$dir/$t"))
 
   /** Global per-shard census with manifest cross-check: n_pieces /
     * sum_tokens / checksum fold from the per-batch manifest rows
@@ -85,6 +95,7 @@ object StreamingExport {
     * n_seqs comes from the merged DATA (sequences span batches); `ok`
     * is 1 iff the data reproduces the folded manifest. */
   def census(spark: SparkSession, dir: String): DataFrame = {
+    recover(spark, dir)
     val man = spark.read.schema(manifestSchema)
       .parquet(s"$dir/manifest")
       .groupBy(col("lang"), col("bucket"))
@@ -265,7 +276,8 @@ object StreamingExport {
     * CONSISTENT census — the census folds the manifest whatever its
     * batch structure, and both trees hold exactly the same rows — and
     * a rerun converges (the fold source is never mutated before its
-    * replacement is complete). Run between micro-batches (maintenance
+    * replacement is complete; entry finishes an interrupted cutover
+    * before the first read). Run between micro-batches (maintenance
     * window): an appendBatch concurrent with the swap could land in
     * the old tree. */
   def compact(spark: SparkSession, dir: String,

@@ -90,12 +90,4 @@ object StreamingSpanScrub {
       out
     } finally spans.unpersist()
   }
-
-  /** foreachBatch sink: scrub each micro-batch, hand the cleaned docs to
-    * `onScrubbed`, grow the span index. */
-  def spanScrubSink(indexDir: String,
-      onScrubbed: (DataFrame, Long) => Unit,
-      every: Int = 16): (DataFrame, Long) => Unit =
-    (batch, batchId) =>
-      onScrubbed(scrubAndIndex(batch, indexDir, batchId, every), batchId)
 }

@@ -16,9 +16,16 @@ class BenchBaseAuditSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("bench-audit")
     try {
       Files.writeString(dir.resolve("FooQueries.scala"),
-        """val queries = Map("q901_stale_probe" -> q901, "q902_other" -> q902)""")
+        """object FooQueries extends QueryPack {
+          |  val queries = Map("q901_stale_probe" -> q901, "q902_other" -> q902)
+          |}""".stripMargin)
       Files.writeString(dir.resolve("BarQueries.scala"),
-        """val queries = Map("q903_fresh" -> q903)""")
+        """object BarQueries extends QueryPack {
+          |  val queries = Map("q903_fresh" -> q903)
+          |}""".stripMargin)
+      // a picks-style annotation map: quotes a benched name, registers none
+      Files.writeString(dir.resolve("Picks.scala"),
+        """val picks = Seq("q901_stale_probe" -> "note")""")
       Files.writeString(dir.resolve("notes.txt"), "\"q901_stale_probe\"")
       test(dir)
     } finally {
@@ -54,6 +61,15 @@ class BenchBaseAuditSpec extends AnyFunSuite {
         _ => 2000L)
       assert(ws.size == 1)
       assert(ws.head.contains("BarQueries.scala"))
+    }
+  }
+
+  test("a file that quotes a benched name but defines no QueryPack is " +
+    "quiet (PlanDump's picks)") {
+    withSrcTree { dir =>
+      val ws = Bench.staleBaseWarnings(1000L, names, dir, _ => 2000L)
+      assert(ws.size == 2 && !ws.exists(_.contains("Picks.scala")),
+        ws.mkString("\n"))
     }
   }
 

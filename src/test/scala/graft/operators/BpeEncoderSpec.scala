@@ -4,7 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Pins [[BpeTrainer.encodeWord]] — the rank-heap production encoder —
-  * to the fold definition ([[BpeTrainer.encodeWordFold]]): same token
+  * to the fold definition ([[encodeWordFold]]): same token
   * sequence on trained merge lists, random words over random trained
   * lists, and hand-built adversarial shapes (rank created-then-skipped,
   * operand consumed by an earlier rank). Also covers [[BpeTrainer
@@ -18,6 +18,34 @@ class BpeEncoderSpec extends SparkSpec {
     (2L, "newest newest newest newest widest widest"),
     (3L, "low newest widest lowest"))
 
+  /** Reference encode: fold every merge over the word in learned order,
+    * one [[BpeTrainer.applyMerge]] pass each — O(nMerges · |word|) per
+    * word. This is the SEMANTIC DEFINITION (what sequential training
+    * would leave the word as); [[BpeTrainer.encodeWord]] is the
+    * production-speed equivalent this spec proves equal to it. */
+  private def encodeWordFold(word: String,
+      merges: Seq[(String, String)]): Seq[String] =
+    merges.foldLeft(word.map(_.toString): Seq[String]) {
+      case (syms, (a, b)) => BpeTrainer.applyMerge(syms, a, b)
+    }
+
+  /** Per-rank application counts of the FULL fold over one word:
+    * counts(i) = how many times merge i fired — the reference for
+    * [[BpeTrainer.heapApplyCounts]]. */
+  private def foldApplyCounts(word: String,
+      merges: Seq[(String, String)]): Array[Int] = {
+    var syms: Seq[String] = word.map(_.toString)
+    val counts = new Array[Int](merges.length)
+    var i = 0
+    merges.foreach { case (a, b) =>
+      val before = syms.length
+      syms = BpeTrainer.applyMerge(syms, a, b)
+      counts(i) = before - syms.length
+      i += 1
+    }
+    counts
+  }
+
   test("heap encoder equals the fold on every corpus word, all prefix vocabularies") {
     val s = spark
     import s.implicits._
@@ -26,7 +54,7 @@ class BpeEncoderSpec extends SparkSpec {
     val words = corpus.flatMap(_._2.split(" ")).distinct
     for (k <- 0 to merges.size; w <- words) {
       val ms = merges.take(k)
-      val want = BpeTrainer.encodeWordFold(w, ms)
+      val want = encodeWordFold(w, ms)
       val got = BpeTrainer.encodeWord(w, BpeTrainer.ranksOf(ms))
       assert(got == want, s"word=$w k=$k: got $got want $want")
       assert(got.mkString == w, "concatenation round-trip")
@@ -53,12 +81,12 @@ class BpeEncoderSpec extends SparkSpec {
       val probe = hist ++ (1 to 20).map(_ =>
         (1 to (1 + rnd.nextInt(10))).map(_ => alpha(rnd.nextInt(alpha.length))).mkString)
       probe.foreach { w =>
-        val want = BpeTrainer.encodeWordFold(w, merges)
+        val want = encodeWordFold(w, merges)
         val got = BpeTrainer.encodeWord(w, ranks)
         assert(got == want, s"trial $trial word=$w merges=$merges:\ngot $got want $want")
         // per-rank application tallies (the merge-curve primitive) must
         // also match the fold's — at every prefix, not just the end
-        val ft = BpeTrainer.foldApplyCounts(w, merges).map(_.toLong)
+        val ft = foldApplyCounts(w, merges).map(_.toLong)
         val ht = BpeTrainer.heapApplyCounts(w, ranks, merges.size)
         val (fc, hc) = (ft.scanLeft(0L)(_ + _), ht.scanLeft(0L)(_ + _))
         assert(hc.toSeq == fc.toSeq,
@@ -73,12 +101,12 @@ class BpeEncoderSpec extends SparkSpec {
     // pass 0 creates "bc").
     val ms1 = Seq(("b", "c"), ("a", "bc"))
     assert(BpeTrainer.encodeWord("abc", BpeTrainer.ranksOf(ms1)) ==
-      BpeTrainer.encodeWordFold("abc", ms1))
+      encodeWordFold("abc", ms1))
     // merges: r0 = (a,bc) — INVALID-ordered (bc not yet created); fold
     // finds nothing at pass 0, r1 = (b,c) then fires; r0 must NOT fire
     // afterwards (its pass is over). Both paths agree on [a, bc].
     val ms2 = Seq(("a", "bc"), ("b", "c"))
-    assert(BpeTrainer.encodeWordFold("abc", ms2) == Seq("a", "bc"))
+    assert(encodeWordFold("abc", ms2) == Seq("a", "bc"))
     assert(BpeTrainer.encodeWord("abc", BpeTrainer.ranksOf(ms2)) == Seq("a", "bc"))
   }
 
@@ -86,7 +114,7 @@ class BpeEncoderSpec extends SparkSpec {
     // r0 = (a,b), r1 = (b,c): in "abc" pass 0 eats b, so (b,c) never
     // fires even though it was adjacent at push time.
     val ms = Seq(("a", "b"), ("b", "c"))
-    assert(BpeTrainer.encodeWordFold("abc", ms) == Seq("ab", "c"))
+    assert(encodeWordFold("abc", ms) == Seq("ab", "c"))
     assert(BpeTrainer.encodeWord("abc", BpeTrainer.ranksOf(ms)) == Seq("ab", "c"))
   }
 
@@ -105,7 +133,7 @@ class BpeEncoderSpec extends SparkSpec {
       .distinct().as[String].collect()
     assert(vocab.nonEmpty)
     vocab.foreach { w =>
-      assert(BpeTrainer.encodeWord(w, ranks) == BpeTrainer.encodeWordFold(w, ms),
+      assert(BpeTrainer.encodeWord(w, ranks) == encodeWordFold(w, ms),
         s"encoders disagree on fixture word '$w'")
     }
   }

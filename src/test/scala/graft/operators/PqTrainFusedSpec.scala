@@ -20,6 +20,24 @@ class PqTrainFusedSpec extends SparkSpec {
   private val M = 4
   private val Ks = 4
 
+  /** The pre-fusion trainer — m sequential per-subspace
+    * [[KMeans.lloydCentroids]] fits, m×(seeding+iters) corpus scans:
+    * the equivalence reference for [[ProductQuantizer.train]]. */
+  private def trainPerSubspace(embs: org.apache.spark.sql.DataFrame,
+      idCol: String, vecCol: String, dim: Int, m: Int, ks: Int,
+      iters: Int): ProductQuantizer.PqModel = {
+    val sub = dim / m
+    val cbs = (0 until m).map { j =>
+      KMeans.lloydCentroids(
+          embs.select(col(idCol), slice(col(vecCol), j * sub + 1, sub).as("subv")),
+          idCol, "subv", k = ks, iters = iters)
+        .collect()
+        .map(r => r.getLong(0) -> r.getSeq[Float](1).toVector)
+        .sortBy(_._1).map(_._2).toVector
+    }.toVector
+    ProductQuantizer.PqModel(m, ks, cbs)
+  }
+
   test("fused trainer reproduces the sequential per-subspace codebooks exactly") {
     val s = spark
     import s.implicits._
@@ -27,7 +45,7 @@ class PqTrainFusedSpec extends SparkSpec {
       .select($"vec_id", $"embedding").localCheckpoint()
 
     val timer = JobTimer.install(s)
-    val seq = ProductQuantizer.trainPerSubspace(
+    val seq = trainPerSubspace(
       e, "vec_id", "embedding", Dim, M, Ks, iters = 2)
     val seqActions = timer.entries.size
     val fused = ProductQuantizer.train(

@@ -56,7 +56,7 @@ class SeqShardWriterSpec extends SparkSpec {
     val first = SeqPacker.readShards(s, d)._1.collect()
       .map(_.toSeq).sortBy(_.mkString("|")).toSeq
     // simulated crash: a half-built tmp from a dead attempt
-    val tmp = new java.io.File(d + ".tmp/data")
+    val tmp = new java.io.File(d + "_compact_tmp/data")
     tmp.mkdirs()
     val junk = new java.io.File(tmp, "part-junk.parquet")
     java.nio.file.Files.write(junk.toPath, Array[Byte](1, 2, 3))
@@ -64,7 +64,7 @@ class SeqShardWriterSpec extends SparkSpec {
     val second = SeqPacker.readShards(s, d)._1.collect()
       .map(_.toSeq).sortBy(_.mkString("|")).toSeq
     assert(second == first, "rerun must converge to identical content")
-    assert(!new java.io.File(d + ".tmp").exists(), "tmp must be swapped away")
+    assert(!new java.io.File(d + "_compact_tmp").exists(), "tmp must be swapped away")
     assert(!new java.io.File(s"$d/data/part-junk.parquet").exists() &&
       SeqPacker.readShards(s, d)._1.count() == first.size,
       "crashed-attempt junk must not survive into the export")
@@ -154,14 +154,35 @@ class SeqShardWriterSpec extends SparkSpec {
       "sidecar retry must re-finish the stale manifest row")
     assert(!new java.io.File(s"$d/_forget_pending").exists(),
       "sidecar must be cleared after the swap commits")
-    // -- window 2: crash between manifest delete and rename --
+    // -- window 2: crash between the manifest swap's two renames (the
+    // complete replacement, marked ready, sits beside a missing live) --
     fs.rename(new org.apache.hadoop.fs.Path(s"$d/manifest"),
-      new org.apache.hadoop.fs.Path(s"$d/manifest.tmp"))
+      new org.apache.hadoop.fs.Path(s"$d/manifest_compact_tmp"))
+    fs.create(new org.apache.hadoop.fs.Path(
+      s"$d/manifest_compact_tmp/_SWAP_READY"), true).close()
     assert(SeqPacker.forgetShards(s, d, Seq.empty[Long].toDF("doc_id"),
       "doc_id", 512) == SeqPacker.ForgetShardStats(0L, 0L, 0L))
     assert(new java.io.File(s"$d/manifest").exists() &&
-      !new java.io.File(s"$d/manifest.tmp").exists(),
+      !new java.io.File(s"$d/manifest_compact_tmp").exists(),
       "entry must complete an interrupted manifest swap")
+  }
+
+  test("forgetShards crash after the manifest replacement is written and " +
+    "before the old manifest is removed: the retry succeeds") {
+    val s = spark
+    import s.implicits._
+    val d = graft.CrashFs.dir(s, "shards")
+    SeqPacker.writeShards(fixturePacked, d)
+    graft.CrashFs.at(graft.CrashFs.Remove, s"$d/manifest") {
+      SeqPacker.forgetShards(s, d, Seq(2L).toDF("doc_id"), "doc_id", 512)
+    }
+    SeqPacker.forgetShards(s, d, Seq(2L).toDF("doc_id"), "doc_id", 512)
+    val (files, man) = SeqPacker.readShards(s, d)
+    assert(files.where(col("docId") === 2L).count() == 0)
+    assert(SeqPacker.manifest(files).collect().map(_.toSeq)
+      .sortBy(_.mkString("|")).toSeq ==
+      man.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq,
+      "the retried manifest must equal the census of the files")
   }
 
   test("forgetSink: a streaming deletion feed drains into the export, " +

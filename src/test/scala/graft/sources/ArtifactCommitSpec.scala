@@ -22,14 +22,17 @@ class ArtifactCommitSpec extends SparkSpec {
   private def fs = org.apache.hadoop.fs.FileSystem.get(
     spark.sparkContext.hadoopConfiguration)
 
+  private def fsFor(p: Path) =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
   private def writeMarker(p: Path, content: String): Unit = {
-    fs.mkdirs(p)
-    val o = fs.create(new Path(p, "marker"), true)
+    fsFor(p).mkdirs(p)
+    val o = fsFor(p).create(new Path(p, "marker"), true)
     o.write(content.getBytes("UTF-8")); o.close()
   }
 
   private def marker(p: Path): String = {
-    val in = fs.open(new Path(p, "marker"))
+    val in = fsFor(p).open(new Path(p, "marker"))
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
   }
@@ -90,6 +93,28 @@ class ArtifactCommitSpec extends SparkSpec {
     assert(marker(live) == "v1", "pre-swap tree restored over the corpse")
     assert(!fs.exists(new Path(s"$d/table_compact_tmp")) &&
       !fs.exists(new Path(s"$d/table_compact_old")))
+  }
+
+  test("swap creates a tree that does not exist yet; a crash before its " +
+    "only rename is recovered") {
+    import graft.CrashFs
+    val d = CrashFs.dir(spark, "firstswap")
+    val live = new Path(s"$d/table")
+    ArtifactCommit.swap(spark, live.toString) { tmp =>
+      writeMarker(new Path(tmp), "v1")
+    }
+    assert(marker(live) == "v1")
+    val fresh = new Path(s"$d/fresh")
+    CrashFs.at(CrashFs.RenameTo, fresh.toString) {
+      ArtifactCommit.swap(spark, fresh.toString) { tmp =>
+        writeMarker(new Path(tmp), "v1")
+      }
+    }
+    assert(!fsFor(fresh).exists(fresh))
+    ArtifactCommit.recoverSwapAt(spark, fresh.toString)
+    assert(marker(fresh) == "v1", "the ready tmp is promoted")
+    assert(!fsFor(fresh).exists(new Path(fresh, "_SWAP_READY")) &&
+      !fsFor(fresh).exists(new Path(s"$d/fresh_compact_tmp")))
   }
 
   test("ids WAL: the _new fallback is never overwritten in place — a " +

@@ -69,6 +69,23 @@ class IoOpsSpec extends SparkSpec {
       (1L, "offline", 2L), (2L, "online", 1L), (3L, "online", 1L)))
   }
 
+  test("ParquetUpsertStore: a crash after the old store is moved away and " +
+    "before the merged store is promoted loses no earlier row") {
+    import spark.implicits._
+    val dir = graft.CrashFs.dir(spark, "upsert") + "/store"
+    val store = new ParquetUpsertStore(dir, Seq("user_id"))
+    def batch(rows: (Long, String, Long)*) =
+      rows.toDF("user_id", "status", "play_count")
+    store.upsert(batch((1L, "online", 1L), (2L, "online", 1L)))
+    graft.CrashFs.at(graft.CrashFs.RenameTo, dir) {
+      store.upsert(batch((1L, "offline", 2L), (3L, "online", 1L)))
+    }
+    store.upsert(batch((4L, "online", 1L)))
+    assert(store.read(spark).as[(Long, String, Long)].collect().toSet == Set(
+      (1L, "offline", 2L), (2L, "online", 1L), (3L, "online", 1L),
+      (4L, "online", 1L)))
+  }
+
   test("iacs parser round-trips pipe-delimited session lines") {
     val r = graft.etl.LogParsers.parseIacsLine(
       "S-9f|50312573|1005360181|2024-01-15 10:00:00|2024-01-15 10:30:00|closed").get

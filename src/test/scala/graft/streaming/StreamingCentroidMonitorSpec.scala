@@ -75,4 +75,31 @@ class StreamingCentroidMonitorSpec extends SparkSpec {
       .select($"drift_cos").as[Double].collect()
     assert(d.nonEmpty && d.forall(_ == 1.0), s"drift: ${d.mkString(",")}")
   }
+
+  test("compact: after a crash between the two renames, centroids and the " +
+    "next compact serve the complete table") {
+    val s = spark
+    import s.implicits._
+    import graft.CrashFs
+    val store = CrashFs.dir(s, "cmon") + "/moments"
+    val sink = StreamingCentroidMonitor.sink(store, "label", "vec")
+    Seq((0L, 1L, Array(1f, 2f)), (1L, 1L, Array(3f, 4f)),
+      (2L, 2L, Array(5f, 6f))).zipWithIndex.foreach { case (r, b) =>
+      sink(Seq(r).toDF("vec_id", "label", "vec"), b.toLong)
+    }
+    def served() = StreamingCentroidMonitor.centroids(s, store)
+      .collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+    val before = served()
+    CrashFs.at(CrashFs.RenameTo, store) {
+      StreamingCentroidMonitor.compact(s, store)
+    }
+    assert(served() == before, "centroids serve the complete table")
+    CrashFs.at(CrashFs.RenameTo, store) {
+      StreamingCentroidMonitor.compact(s, store)
+    }
+    StreamingCentroidMonitor.compact(s, store)
+    assert(served() == before, "the next compact converges")
+    assert(spark.read.parquet(store).select($"batch_id").distinct()
+      .as[Long].collect().toSeq == Seq(-1L), "one folded partition")
+  }
 }

@@ -271,4 +271,29 @@ class StreamingExportSpec extends SparkSpec {
     assert(StreamingExport.census(s, dir).collect()
       .forall(_.getLong(5) == 1L), "census ok after recovery")
   }
+
+  test("compact: a crash between the data swap's two renames; a rerun " +
+    "converges") {
+    val s = spark
+    import s.implicits._
+    import graft.CrashFs
+    val dir = CrashFs.dir(s, "stream_export")
+    val placed = SeqPacker.pack(
+      (1L to 30L).map(i =>
+        Piece("l" + (i % 2), i % 2, i, 0L, i, (i * 53 % 400) + 1)).toDS(),
+      512).toDF().localCheckpoint()
+    Seq(0L, 1L, 2L).foreach { b =>
+      StreamingExport.appendBatch(placed.where($"ord1" % 3 === b), dir, b)
+    }
+    def censusRows() = StreamingExport.census(s, dir).collect()
+      .map(_.toSeq).sortBy(_.mkString("|")).toSeq
+    val before = censusRows()
+    CrashFs.at(CrashFs.RenameTo, s"$dir/data") {
+      StreamingExport.compact(s, dir)
+    }
+    StreamingExport.compact(s, dir)
+    assert(censusRows() == before, "the rerun fold is invisible to readers")
+    assert(StreamingExport.readPlaced(s, dir).select($"batch_id").distinct()
+      .as[Long].collect().sorted.toSeq == Seq(-1L, 2L))
+  }
 }
